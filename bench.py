@@ -438,13 +438,14 @@ def main() -> None:
     # scaling probe overwrote the 32-core run's per-query data, so the
     # round's per-lane ground truth was lost and PERF's scaling table came
     # up empty. The artifact is therefore ALSO written to a core-count-
-    # keyed sidecar (BENCH_FULL_c{cpus}.json) so runs at different
-    # $SPARK_GRAFT_CPUS never collide; BENCH_FULL.json stays as the
-    # un-keyed latest-run pointer every existing tool reads, and the
-    # stdout one-line JSON contract is unchanged (additive key only).
+    # keyed sidecar (BENCH_FULL_c{cpus}.json, cpus = the session's core
+    # count) so runs at different core counts never collide; BENCH_FULL.json
+    # stays as the un-keyed latest-run pointer every existing tool reads.
+    # The stdout line's "queries_file" names the keyed sidecar.
+    from iii_aibigdata_capstone_spark.session import default_parallelism
+
     full_path = os.path.join(REPO, "BENCH_FULL.json")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 0))
-    keyed_path = os.path.join(REPO, f"BENCH_FULL_c{cpus}.json")
+    keyed_path = os.path.join(REPO, f"BENCH_FULL_c{default_parallelism()}.json")
     for path in (full_path, keyed_path):
         with open(path, "w") as fh:
             json.dump(out, fh, indent=1, sort_keys=True)

@@ -13,7 +13,6 @@ Scale design:
 
 from __future__ import annotations
 
-import os
 from textwrap import dedent
 from typing import NamedTuple
 
@@ -1722,6 +1721,9 @@ def x2_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+NEARDUP_BLOCKS = 8  # B row-blocks of the x2_embedding_neardup tiling
+
+
 @query(
     "x2_embedding_neardup",
     oracle=dedent(
@@ -1758,7 +1760,7 @@ def x2_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    n_blocks = int(os.environ.get("SPARK_GRAFT_NEARDUP_BLOCKS", "8"))
+    n_blocks = NEARDUP_BLOCKS
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )

@@ -1,215 +1,49 @@
 """Assemble the full query registry from the operator modules.
 
-``__spark_entry__.py`` (the driver contract) is a thin adapter over this
-module: ``queries()``/``oracle_sql()`` are derived from :data:`ALL_SPECS`.
+:data:`ALL_SPECS` lists every spec in module registration order; importing
+this module reads no file and starts no process. ``__spark_entry__.py`` (the
+driver contract) is a thin adapter over it: ``queries()``/``oracle_sql()``
+read the past ``CORRECTNESS_r{N}.json`` records and order the specs with
+:func:`check_order`, whose single rule is: a lane ranks by the round of its
+latest record if that record is green for it, else 0, and lanes sort by
+rank ascending and stable.
 """
 
 from __future__ import annotations
 
-import os
+from collections.abc import Mapping, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from .catalog import table
+from .ml import cluster, metrics, quarter, rf_apply
+from .operators import (
+    analytics,
+    curation,
+    dedup,
+    graph,
+    grouped,
+    io_formats,
+    kernels,
+    multimodal,
+    relational,
+    replay,
+    similarity,
+    skew,
+    surface,
+    textual,
+    timeseries,
+)
 from .registry import QuerySpec
 
 
-def _driver_last_green_round() -> dict[str, int]:
-    """name -> highest round number whose CORRECTNESS file records a green
-    row (hash or intended rows-only) for the query. Drives the STALE-FIRST
-    rotation: with every query verified at least once, the residual risk
-    is stale greens, so the driver's per-round budget should re-check the
-    queries it has not seen for the longest."""
-    import glob
-    import json
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                records = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, rec in records.items():
-            if not isinstance(rec, dict):
-                continue
-            green = rec.get("hash_match") is True or (
-                rec.get("err") == "no_oracle" and rec.get("spark_rows") is not None
-            )
-            if green:
-                last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
-def _driver_verified_names() -> tuple[frozenset[str], frozenset[str]]:
-    """Names that already earned a fully-green driver CORRECTNESS row in
-    ANY past round (rows + schema + hash all true, or the intended
-    rows-only / no-oracle record for sketch queries).
-
-    The driver verifies queries in registration order and may stop early
-    on a time budget, so anything in this set registers LAST — queries
-    without a green row yet get first claim on the driver's oracle
-    budget. The set is read from the driver's own ``CORRECTNESS_r*.json``
-    artifacts at import time, so each new round's results reorder the
-    next round automatically (a query that FAILED a check is deliberately
-    not in the set — it must re-verify first).
-
-    Returns (hash_verified, rows_only_verified) as separate sets: a query
-    whose only green record is rows-only but that has SINCE gained a full
-    oracle (e.g. the r4 x3_mmr_rerank upgrade) must re-register first so
-    the driver records the stronger hash row."""
-    import glob
-    import json
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    hash_ok: set[str] = set()
-    rows_ok: set[str] = set()
-    # numeric round order, NOT lexicographic: the driver zero-pads today
-    # (r01..r09, safe through r99), but this loop's "later failure forces
-    # re-verification" logic must not silently depend on a filename
-    # convention the repo does not control
-    rounds: list[tuple[int, str]] = []
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m:
-            rounds.append((int(m.group(1)), path))
-    for _rnd, path in sorted(rounds):
-        try:
-            with open(path) as fh:
-                records = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, rec in records.items():
-            if not isinstance(rec, dict):
-                continue
-            if rec.get("hash_match") is True:
-                hash_ok.add(name)
-            elif rec.get("err") == "no_oracle" and rec.get("spark_rows") is not None:
-                rows_ok.add(name)
-            elif rec.get("hash_match") is False or (
-                rec.get("err") not in (None, "no_oracle")
-            ):
-                # a later failure forces re-verification
-                hash_ok.discard(name)
-                rows_ok.discard(name)
-    return frozenset(hash_ok), frozenset(rows_ok)
-
-
-_DRIVER_HASH_VERIFIED, _DRIVER_ROWS_ONLY = _driver_verified_names()
-# union kept for the emulator's "unchecked queries" default mode
-_DRIVER_VERIFIED: frozenset[str] = _DRIVER_HASH_VERIFIED | _DRIVER_ROWS_ONLY
-_DRIVER_LAST_GREEN = _driver_last_green_round()
-
-
-def _git_last_commit_times() -> dict[str, int]:
-    """repo-relative path -> unix time of the last commit touching it,
-    from ONE ``git log --name-only`` walk (newest-first; the first time a
-    path appears is its last-modified commit). Empty dict when git is
-    unavailable — callers must degrade gracefully."""
-    import subprocess
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    try:
-        out = subprocess.run(
-            ["git", "-C", root, "log", "--format=%x01%ct", "--name-only"],
-            capture_output=True,
-            text=True,
-            timeout=30,
-        ).stdout
-    except Exception:
-        return {}
-    times: dict[str, int] = {}
-    cur: int | None = None
-    for line in out.splitlines():
-        if line.startswith("\x01"):
-            try:
-                cur = int(line[1:])
-            except ValueError:
-                cur = None
-        elif line.strip() and cur is not None:
-            times.setdefault(line.strip(), cur)
-    return times
-
-
-def _touched_since_green(specs: list[QuerySpec]) -> frozenset[str]:
-    """Names whose BUILDER MODULE was committed AFTER the CORRECTNESS
-    artifact of the query's last driver-green round — i.e. lanes whose
-    code changed since the driver last hash-checked them. VERDICT r14
-    item 3: the stale-first rotation sent lanes *changed this round* to
-    the back of the driver's ~50-query budget precisely because they
-    were green last round; "code-touched since last green" must outrank
-    "stalest green", so a round's optimization targets get driver hash
-    checks the round they change. Conservative on missing data: no git,
-    no module file, or no artifact timestamp -> not touched (pure
-    staleness rotation, the r14 behavior)."""
-    import sys as _sys
-
-    file_ct = _git_last_commit_times()
-    if not file_ct:
-        return frozenset()
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    green_ct: dict[int, int] = {}
-    for rnd in set(_DRIVER_LAST_GREEN.values()):
-        for fname in (f"CORRECTNESS_r{rnd:02d}.json", f"CORRECTNESS_r{rnd}.json"):
-            if fname in file_ct:
-                green_ct[rnd] = file_ct[fname]
-                break
-    touched: set[str] = set()
-    mod_ct_cache: dict[str, int | None] = {}
-    for spec in specs:
-        rnd = _DRIVER_LAST_GREEN.get(spec.name)
-        if rnd is None or rnd not in green_ct:
-            continue
-        mod = getattr(spec.builder, "__module__", None)
-        if mod not in mod_ct_cache:
-            path = getattr(_sys.modules.get(mod), "__file__", None)
-            rel = os.path.relpath(path, root) if path else None
-            mod_ct_cache[mod] = file_ct.get(rel) if rel else None
-        mct = mod_ct_cache[mod]
-        if mct is not None and mct > green_ct[rnd]:
-            touched.add(spec.name)
-    return frozenset(touched)
-
-
 def _collect_specs() -> list[QuerySpec]:
-    from .operators import relational
-
-    modules = [relational]
-    for name in (
-        "timeseries",
-        "dedup",
-        "similarity",
-        "textual",
-        "grouped",
-        "multimodal",
-        "surface",
-        "io_formats",
-        "kernels",
-        "replay",
-        "skew",
-        "curation",
-        "graph",
-        "analytics",
-    ):
-        try:
-            module = __import__(f"{__package__}.operators.{name}", fromlist=["SPECS"])
-        except ImportError:
-            continue
-        modules.append(module)
-    try:
-        from .ml import cluster, metrics, quarter, rf_apply
-
-        modules.extend([quarter, cluster, metrics, rf_apply])
-    except ImportError:
-        pass
+    modules = (
+        relational, timeseries, dedup, similarity, textual, grouped, multimodal,
+        surface, io_formats, kernels, replay, skew, curation, graph, analytics,
+        quarter, cluster, metrics, rf_apply,
+    )
     specs: list[QuerySpec] = []
     seen: set[str] = set()
     for module in modules:
@@ -218,45 +52,36 @@ def _collect_specs() -> list[QuerySpec]:
                 raise ValueError(f"duplicate query name {spec.name!r}")
             seen.add(spec.name)
             specs.append(spec)
-    # Stable partition: driver-unverified queries first (they need a
-    # CORRECTNESS row this round), already-green queries last. Within the
-    # unverified group, full-oracle queries precede rows-only ones — the
-    # driver's per-round budget covers ~50 names, and a hash-green row is
-    # strictly stronger evidence than a rows-only record, so rows-only
-    # queries (all value-pinned by local pytest goldens anyway) wait their
-    # turn. "verified" for ordering purposes = a green hash row, or a
-    # rows-only row for a query that (still) has no oracle. A rows-only
-    # query that has since GAINED an oracle re-registers first for its
-    # hash row. WITHIN the verified group, STALEST-FIRST rotation: sort by
-    # the round of the last green record ascending, so the driver's
-    # budget re-verifies the queries it has not checked for the longest
-    # instead of re-reading last round's fifty forever (stale-green risk
-    # replaces never-checked risk once everything is covered). The
-    # oracle-less penalty applies only WITHIN the unverified group
-    # (hash-green evidence first while coverage is incomplete); inside
-    # the verified group staleness alone decides, otherwise rows-only
-    # lanes verified in r1/r2 would wait behind every hash lane forever
-    # (VERDICT r7 item 10). r15 (VERDICT r14 item 3): WITHIN the verified
-    # group, lanes whose builder-module code was committed AFTER their
-    # last green CORRECTNESS artifact rank FIRST — a changed lane's green
-    # row is evidence about code that no longer exists, which is strictly
-    # weaker than any unchanged lane's staleness. Module order breaks
-    # remaining ties stably.
-    touched = _touched_since_green(specs)
-    specs.sort(
-        key=lambda spec: (
-            spec.name in _DRIVER_HASH_VERIFIED
-            or (spec.oracle is None and spec.name in _DRIVER_ROWS_ONLY),
-            spec.oracle is None
-            and not (
-                spec.name in _DRIVER_HASH_VERIFIED
-                or spec.name in _DRIVER_ROWS_ONLY
-            ),
-            spec.name not in touched,
-            _DRIVER_LAST_GREEN.get(spec.name, 0),
-        )
-    )
     return specs
+
+
+def check_order(
+    specs: Sequence[QuerySpec], rounds: Mapping[int, Mapping[str, Mapping]]
+) -> list[QuerySpec]:
+    """Order ``specs`` for a verifier that checks them in order and may stop
+    early on a time budget, given its past results: round number -> query
+    name -> record (``hash_match``, ``err``, ``spark_rows``).
+
+    A spec's rank is the round of its latest record if that record is
+    green for the spec, else 0. Green means ``hash_match`` is true, or the
+    record is the ``no_oracle`` rows-only record and the spec has no
+    oracle. Specs sort by rank, ascending and stable: never-recorded and
+    red lanes first, then the stalest greens, ties in registration order.
+    """
+    latest = {
+        name: (rnd, rec) for rnd in sorted(rounds) for name, rec in rounds[rnd].items()
+    }
+
+    def rank(spec: QuerySpec) -> int:
+        rnd, rec = latest.get(spec.name, (0, {}))
+        green = rec.get("hash_match") is True or (
+            spec.oracle is None
+            and rec.get("err") == "no_oracle"
+            and rec.get("spark_rows") is not None
+        )
+        return rnd if green else 0
+
+    return sorted(specs, key=rank)
 
 
 ALL_SPECS: list[QuerySpec] = _collect_specs()

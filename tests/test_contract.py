@@ -4,6 +4,11 @@ key maps to a real query."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
 import pytest
 
 import __spark_entry__ as E
@@ -30,34 +35,83 @@ def test_bogus_sf_dir_raises(spark):
         qs["q1_pricing_summary"](spark, "/root/testdata/sf_does_not_exist").collect()
 
 
-def test_rotation_touched_lanes_outrank_stale_greens():
-    """r15 rotation contract (VERDICT r14 item 3): within the
-    driver-verified group, every lane whose builder module was committed
-    AFTER the lane's last green CORRECTNESS artifact must register ahead
-    of every unchanged lane — changed code's old green row is weaker
-    evidence than any unchanged lane's staleness. Skips cleanly when git
-    metadata is unavailable (the documented fallback is pure staleness)."""
-    import pytest
+def test_check_order_rule_on_synthetic_records():
+    """queries.check_order, the correctness-check order: a lane ranks by the
+    round of its latest record if that record is green for it, else 0;
+    lanes sort by rank, ascending and stable. Synthetic records only."""
+    from iii_aibigdata_capstone_spark.queries import check_order
+    from iii_aibigdata_capstone_spark.registry import QuerySpec
 
-    from iii_aibigdata_capstone_spark import queries as Q
+    def spec(name, oracle="SELECT 1"):
+        return QuerySpec(name=name, builder=None, oracle=oracle)
 
-    touched = Q._touched_since_green(Q.ALL_SPECS)
-    if not touched:
-        pytest.skip("no git metadata or nothing touched since last green")
-    verified_order = [
-        s.name
-        for s in Q.ALL_SPECS
-        if s.name in Q._DRIVER_HASH_VERIFIED
-        or (s.oracle is None and s.name in Q._DRIVER_ROWS_ONLY)
+    green = {"hash_match": True, "err": None, "spark_rows": 3}
+    red = {"hash_match": False, "err": None, "spark_rows": 3}
+    rows_only = {"hash_match": None, "err": "no_oracle", "spark_rows": 3}
+    specs = [
+        spec("stale_green"),
+        spec("fresh_green"),
+        spec("tie_a"),
+        spec("red_after_green"),
+        spec("never_recorded"),
+        spec("sketch", oracle=None),
+        spec("gained_oracle"),
+        spec("tie_b"),
     ]
-    untouched_idx = [
-        i for i, n in enumerate(verified_order) if n not in touched
+    rounds = {  # keyed by round, deliberately not in round order
+        10: {"fresh_green": green, "red_after_green": red, "gained_oracle": rows_only},
+        1: {"stale_green": green, "red_after_green": green},
+        2: {"tie_a": green, "sketch": rows_only, "tie_b": green, "unregistered": red},
+    }
+    assert [s.name for s in check_order(specs, rounds)] == [
+        # rank 0: red latest record, never recorded, rows-only record for
+        # a lane that has an oracle; module order among them
+        "red_after_green",
+        "never_recorded",
+        "gained_oracle",
+        # then the stalest greens; a rows-only record is green for a lane
+        # with no oracle; ties keep module order
+        "stale_green",
+        "tie_a",
+        "sketch",
+        "tie_b",
+        "fresh_green",
     ]
-    touched_idx = [i for i, n in enumerate(verified_order) if n in touched]
-    if touched_idx and untouched_idx:
-        assert max(touched_idx) < min(untouched_idx), (
-            "a touched-since-green lane registers behind an unchanged lane"
-        )
+    assert check_order(specs, {}) == specs
+
+
+def test_registry_import_reads_no_records_and_starts_no_process():
+    """Importing the registry in a fresh interpreter starts no subprocess
+    and opens no correctness record: the check order is applied by the
+    ``__spark_entry__`` adapter, not at library import."""
+    probe = textwrap.dedent(
+        """
+        import sys
+
+        seen = []
+
+        def hook(event, args):
+            if event == "subprocess.Popen" or (
+                event == "open" and "CORRECTNESS_r" in str(args[0])
+            ):
+                seen.append((event, str(args[0])))
+
+        sys.addaudithook(hook)
+        import iii_aibigdata_capstone_spark.queries as q
+
+        assert q.ALL_SPECS
+        print(seen)
+        """
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True,
+        text=True,
+        timeout=120,
+        check=True,
+    )
+    assert out.stdout.strip() == "[]", out.stdout
 
 
 def test_all_queries_have_unique_sorted_columns():

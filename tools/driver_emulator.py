@@ -8,8 +8,7 @@ risk class this tool closes: divergences that only materialize with more
 rows (ROUND ties landing on half-cent boundaries, float aggregation
 order, engine type widenings). Run it before a round ends:
 
-    python tools/driver_emulator.py                  # unchecked queries, sf0.01
-    python tools/driver_emulator.py --all            # every oracle query
+    python tools/driver_emulator.py                  # every oracle query, sf0.01
     python tools/driver_emulator.py name [name ...]  # specific queries
 
 Exit 1 if any compared query mismatches. The compare is strictly harsher
@@ -28,7 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from iii_aibigdata_capstone_spark.queries import ALL_SPECS, _DRIVER_VERIFIED
+from iii_aibigdata_capstone_spark.queries import ALL_SPECS
 from iii_aibigdata_capstone_spark.session import get_spark
 
 TABLES = (
@@ -153,15 +152,15 @@ def normalize(columns, rows):
 def main() -> None:
     import duckdb
 
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    check_all = "--all" in sys.argv
+    args = set(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
     specs = [s for s in ALL_SPECS if s.oracle is not None]
+    unknown = args - {s.name for s in specs}
+    if unknown:
+        sys.exit(f"not an oracled query: {' '.join(sorted(unknown))}")
     if args:
-        specs = [s for s in specs if s.name in set(args)]
-    elif not check_all:
-        specs = [s for s in specs if s.name not in _DRIVER_VERIFIED]
+        specs = [s for s in specs if s.name in args]
 
     spark = get_spark(app_name="iii-capstone-driver-emulator")
     spark.sparkContext.setLogLevel("ERROR")
