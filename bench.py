@@ -9,18 +9,17 @@ Each query is executed to completion with the ``noop`` sink (full plan
 runs, nothing collected to the driver — measures the engine, not py4j
 serialization).
 
-Structure (round 9): the headline list runs as $SPARK_GRAFT_BENCH_CHUNKS
-(default 4) FRESH-JVM chunks executed SERIALLY — ~90 query executions in
-one shared JVM accumulate code-cache/GC/fragmentation drift that lands on
+Structure (round 9): the headline list runs as N_CHUNKS (4) FRESH-JVM
+chunks executed SERIALLY — ~90 query executions in one shared JVM
+accumulate code-cache/GC/fragmentation drift that lands on
 whichever queries run late, which is why every prior round's bench showed
 diffuse >12% movers on untouched lanes (adjudicated noise in BENCH_NOTES).
 A fresh JVM per ~22-query chunk bounds the contamination window to one
 chunk; chunks never run concurrently (32 threads each would contend for
 the same cores and corrupt every number). Each chunk pays its own warmup
 (flagship primes JVM/codegen; an identity mapInPandas primes the Python
-worker pool) so per-query numbers stay steady-state engine cost.
-Set SPARK_GRAFT_BENCH_CHUNKS=0 to force the legacy single-JVM in-process
-run (used by the chunk subprocesses themselves via --slice).
+worker pool) so per-query numbers stay steady-state engine cost. Each
+chunk child runs in-process through ``--slice``.
 """
 
 from __future__ import annotations
@@ -143,6 +142,8 @@ HEADLINE = [
 # The two non-registry entries, timed by the last chunk.
 SPECIALS = ["flagship", "st_stream_drain"]
 
+N_CHUNKS = 4
+
 
 # Round-over-round adjudications the judge asked to carry with the metric.
 # The ledger itself is the TRACKED, APPEND-ONLY BENCH_NOTES.md (promoted
@@ -179,8 +180,7 @@ def run_slice(
     from iii_aibigdata_capstone_spark.session import get_spark
 
     sf = float(os.path.basename(SF_DIR.rstrip("/")).replace("sf", "") or 0.1)
-    # Each chunk times ~25 executions; 24g keeps even the legacy whole-list
-    # mode (SPARK_GRAFT_BENCH_CHUNKS=0) out of old-gen pressure.
+    # Each chunk times ~25 executions; 24g keeps them out of old-gen pressure.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
     spark = get_spark(app_name="iii-capstone-bench")
     # OFF, not ERROR: benign ERROR-level shutdown noise (DAGScheduler
@@ -340,61 +340,51 @@ def main() -> None:
     # the artifact at the end, and failing on a broken checkout AFTER the
     # ~220s timed run would discard every timing
     notes = bench_notes()
-    all_names = HEADLINE + SPECIALS
-    # test hook: SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the run (smoke the
-    # orchestrator without paying the full headline); never set by the driver
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        all_names = [n for n in all_names if n in set(only.split(","))]
-    n_chunks = int(os.environ.get("SPARK_GRAFT_BENCH_CHUNKS", "4"))
     timings: dict[str, float] = {}
     firsts: dict[str, float] = {}
     errors: dict[str, str] = {}
-    if n_chunks <= 0:
-        timings, firsts, errors = run_slice(all_names)  # legacy single-JVM mode
-    else:
-        for chunk in chunked(all_names, n_chunks):
-            fd, out_path = tempfile.mkstemp(prefix="bench_chunk_", suffix=".json")
-            os.close(fd)
-            tail = ""  # THIS chunk's stderr only — never a prior chunk's
+    for chunk in chunked(HEADLINE + SPECIALS, N_CHUNKS):
+        fd, out_path = tempfile.mkstemp(prefix="bench_chunk_", suffix=".json")
+        os.close(fd)
+        tail = ""  # THIS chunk's stderr only — never a prior chunk's
+        try:
             try:
-                try:
-                    proc = subprocess.run(
-                        [sys.executable, os.path.abspath(__file__),
-                         "--slice", ",".join(chunk), "--out", out_path],
-                        cwd=REPO,
-                        stdout=subprocess.DEVNULL,
-                        stderr=subprocess.PIPE,
-                        timeout=2400,
+                proc = subprocess.run(
+                    [sys.executable, os.path.abspath(__file__),
+                     "--slice", ",".join(chunk), "--out", out_path],
+                    cwd=REPO,
+                    stdout=subprocess.DEVNULL,
+                    stderr=subprocess.PIPE,
+                    timeout=2400,
+                )
+                tail = proc.stderr.decode(errors="replace")[-400:]
+                with open(out_path) as fh:
+                    part = json.load(fh)
+                timings.update(
+                    {k: float(v) for k, v in part["timings"].items()}
+                )
+                firsts.update(
+                    {k: float(v) for k, v in part.get("first_sample", {}).items()}
+                )
+                errors.update(part["errors"])
+            except subprocess.TimeoutExpired as ex:
+                if ex.stderr:
+                    tail = ex.stderr.decode(errors="replace")[-400:]
+                raise
+        except (OSError, json.JSONDecodeError, KeyError,
+                subprocess.TimeoutExpired) as ex:
+            for name in chunk:
+                if name not in timings:
+                    # keep the END of stderr — that's where the fatal
+                    # exception line lives (review r9)
+                    errors[name] = (
+                        f"chunk failed ({type(ex).__name__}): {tail[-160:]}"[:200]
                     )
-                    tail = proc.stderr.decode(errors="replace")[-400:]
-                    with open(out_path) as fh:
-                        part = json.load(fh)
-                    timings.update(
-                        {k: float(v) for k, v in part["timings"].items()}
-                    )
-                    firsts.update(
-                        {k: float(v) for k, v in part.get("first_sample", {}).items()}
-                    )
-                    errors.update(part["errors"])
-                except subprocess.TimeoutExpired as ex:
-                    if ex.stderr:
-                        tail = ex.stderr.decode(errors="replace")[-400:]
-                    raise
-            except (OSError, json.JSONDecodeError, KeyError,
-                    subprocess.TimeoutExpired) as ex:
-                for name in chunk:
-                    if name not in timings:
-                        # keep the END of stderr — that's where the fatal
-                        # exception line lives (review r9)
-                        errors[name] = (
-                            f"chunk failed ({type(ex).__name__}): {tail[-160:]}"[:200]
-                        )
-            finally:
-                try:
-                    os.unlink(out_path)
-                except OSError:
-                    pass
+        finally:
+            try:
+                os.unlink(out_path)
+            except OSError:
+                pass
 
     total = round(sum(timings.values()), 3)
     # Provenance stamp (review r11): a fresh per-run id rides BOTH the

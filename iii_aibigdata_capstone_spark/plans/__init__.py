@@ -1,5 +1,6 @@
 """Plan introspection: programmatic checks over ``explain('formatted')``
-output, used by the plan-regression tests and by hand during tuning.
+output, used by the plan-claim table (``claims.py``) and by hand during
+tuning.
 
 The engine does not implement its own optimizer (SURVEY.md §4: Catalyst
 does); what it owns is ASSERTING that Catalyst produced the plan shapes the

@@ -62,18 +62,19 @@ class PlanAudit:
             if s
         ]
 
+    def nodes(self, *names: str) -> int:
+        """Number of plan nodes whose operator is one of ``names``.
+
+        Formatted explain prints each operator twice (tree line and the
+        numbered ``(N) Op`` detail header), so a raw substring count
+        double-counts every node; only the numbered headers are counted.
+        """
+        ops = "|".join(map(re.escape, names))
+        return len(re.findall(rf"^\(\d+\) (?:{ops})\b", self.text, re.MULTILINE))
+
     @property
     def python_map_operators(self) -> int:
-        # count numbered node headers only — formatted explain prints each
-        # operator twice (tree line + "(N) Op" detail section), so a raw
-        # substring count double-counts every node
-        return len(
-            re.findall(
-                r"^\(\d+\) (?:MapInPandas|FlatMapGroupsInPandas)",
-                self.text,
-                re.MULTILINE,
-            )
-        )
+        return self.nodes("MapInPandas", "FlatMapGroupsInPandas")
 
 
 def audit(df: DataFrame) -> PlanAudit:

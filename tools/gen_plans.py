@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md — an annotated gallery of formatted physical plans
-for representative queries, with auto-verified claims (each claim is checked
-against the plan text at generation time; generation fails if a claim stops
-holding). Run after changing operator plan shapes:
+"""Regenerate PLANS.md from the plan-claim table
+(``iii_aibigdata_capstone_spark/plans/claims.py``): each row's note, its
+claims and its formatted physical plan at sf0.001. Exits non-zero and
+writes nothing if any claim does not hold. Run after changing the table or
+an operator's plan shape:
 
     python tools/gen_plans.py
 """
@@ -10,1000 +11,42 @@ holding). Run after changing operator plan shapes:
 from __future__ import annotations
 
 import os
-import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-from iii_aibigdata_capstone_spark.plans.audit import audit
-from iii_aibigdata_capstone_spark.queries import flagship, registry
-from iii_aibigdata_capstone_spark.session import get_spark
+from iii_aibigdata_capstone_spark.plans.claims import ROWS, audit_lane  # noqa: E402
+from iii_aibigdata_capstone_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
-
-# (name, builder-key or None for flagship, what-to-see notes,
-#  [(claim text, predicate over PlanAudit)])
-def bnlj_count(a) -> int:
-    """Count NUMBERED BroadcastNestedLoopJoin plan nodes — formatted
-    explain prints each operator twice (numbered header + detail), so a
-    bare substring count double-counts (the r9 audit discipline). ONE
-    definition for every claim that pins an exact nested-loop count."""
-    return len(re.findall(r"^\(\d+\) BroadcastNestedLoopJoin", a.text, re.M))
-
-
-GALLERY = [
-    (
-        "flagship",
-        None,
-        "Scan -> filter -> 5-way join -> aggregate -> window rank. Dimension "
-        "tables broadcast; the lineitem-orders fact spine is MERGE-hinted "
-        "since r5 (compressed-parquet size estimates auto-broadcast a fact "
-        "table otherwise — the plan that dies at 100 TB); the windowed "
-        "ranking runs on the (tiny) aggregated table.",
-        [
-            ("dimension joins are BroadcastHashJoin", lambda a: a.broadcast_joins >= 2),
-            ("fact spine is SortMergeJoin", lambda a: a.sort_merge_joins >= 1),
-        ],
-    ),
-    (
-        "q1_pricing_summary",
-        "q1_pricing_summary",
-        "TPC-H Q1 shape: the date filter is pushed into the parquet scan and "
-        "the scan reads only the columns the aggregate needs.",
-        [
-            ("filter pushed to the scan", lambda a: a.has_pushed_filters),
-            ("scan reads <= 7 columns", lambda a: a.read_widths and max(a.read_widths) <= 7),
-        ],
-    ),
-    (
-        "w2_nms_greedy",
-        "w2_nms_greedy",
-        "Custom physical operator (greedy NMS): ONE hash exchange on the "
-        "group key, in-partition sort makes groups contiguous, then a single "
-        "MapInPandas streams whole-group Arrow batches through the kernel.",
-        [
-            ("a single MapInPandas stage runs the kernel", lambda a: a.python_map_operators >= 1),
-            ("at most 2 hash exchanges (initial + AQE rendering)", lambda a: a.hash_exchanges <= 2),
-        ],
-    ),
-    (
-        "x2_ngram_jaccard (at-scale shape: auto-broadcast off)",
-        "x2_ngram_jaccard",
-        "Inverted-index near-dup join on fixed-width hashed shingle keys. "
-        "The shingle table is materialized once (localCheckpoint) because "
-        "exchange reuse does not cover the two self-join sides — without it "
-        "the explode+window pipeline runs twice. Shown with auto-broadcast "
-        "disabled to expose the at-scale sort-merge join.",
-        [
-            (
-                "raw documents scanned at most once (checkpointed shingles feed both sides)",
-                lambda a: a.text.count("documents.parquet") <= 1,
-            ),
-        ],
-    ),
-    (
-        "x5_bloom_semijoin",
-        "x5_bloom_semijoin",
-        "Explicit Bloom-filter semi-join: the ~2 KB filter (and the build-side "
-        "membership set) arrive by broadcast, so the fact-side probe is "
-        "MAP-ONLY — the single hash exchange in the plan is the final "
-        "per-year aggregation, and the orders scan reads exactly the two "
-        "consumed columns. The shape Spark's own runtime bloom filters "
-        "inject, made explicit and hash-checkable.",
-        [
-            ("exactly one hash exchange (the final aggregate)", lambda a: a.hash_exchanges == 1),
-            ("filter words + membership reach the probe by broadcast", lambda a: a.broadcast_joins >= 5),
-            ("orders scan pruned to 2 columns", lambda a: a.read_widths and max(a.read_widths) <= 2),
-        ],
-    ),
-    (
-        "x5_bootstrap_ci",
-        "x5_bootstrap_ci",
-        "One-pass multiplier bootstrap: 16 Poisson-weighted replica means "
-        "per group ride a SINGLE map-side-combinable aggregation (34 "
-        "exact-integer partial columns), so the only exchange in the plan "
-        "is the 5-group hash aggregate — no resampled data copies, no "
-        "Python, the whole weight ladder and CI pick inside whole-stage "
-        "codegen.",
-        [
-            ("exactly one hash exchange (the group aggregate)", lambda a: a.hash_exchanges == 1),
-            ("orders scan pruned to the 3 consumed columns", lambda a: a.read_widths and max(a.read_widths) <= 3),
-            ("no Python operators anywhere", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x4_decontaminate",
-        "x4_decontaminate",
-        "Benchmark decontamination: the tiny benchmark gram index broadcasts; "
-        "the corpus-side gram table never shuffles for the join.",
-        [
-            ("benchmark side broadcasts", lambda a: a.broadcast_joins >= 1),
-            ("no SortMergeJoin", lambda a: a.sort_merge_joins == 0),
-        ],
-    ),
-    (
-        "x5_histogram_bins",
-        "x5_histogram_bins",
-        "Two-pass histogram: the 1-row min/max aggregate broadcasts "
-        "(BroadcastNestedLoopJoin); binning is map-side; the only hash "
-        "exchange carries 20 bin rows.",
-        [
-            (
-                "bounds join is broadcast",
-                lambda a: "BroadcastNestedLoopJoin" in a.text or a.broadcast_joins >= 1,
-            ),
-        ],
-    ),
-    (
-        "ts_rollup_hierarchy",
-        "ts_rollup_hierarchy",
-        "Hierarchical rollup: day/week grains re-aggregate the checkpointed "
-        "hourly partial — the raw events scan appears at most once.",
-        [
-            ("raw table scanned at most once", lambda a: a.text.count("events.parquet") <= 1),
-        ],
-    ),
-    (
-        "x5_interval_join_banded (at-scale shape: auto-broadcast off)",
-        "x5_interval_join_banded",
-        "Interval join with NO equi key: banding by the window width turns "
-        "the O(n^2) nested-loop range join into a hash join on the band id "
-        "(errors explode into exactly 2 bands each; the exact range "
-        "predicate filters inside the band).",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "no BroadcastNestedLoopJoin",
-                lambda a: "BroadcastNestedLoopJoin" not in a.text,
-            ),
-        ],
-    ),
-    (
-        "q20_dominant_supplier (at-scale shape: auto-broadcast off)",
-        "q20_dominant_supplier",
-        "Correlated-subquery decorrelation: the per-part total is a window "
-        "SUM over the (part, supplier) aggregate, and the part-name "
-        "semi-filter sits BELOW both (broadcast semi join feeds the hash "
-        "aggregate), so the big shuffle only carries matching parts.",
-        [
-            (
-                "part semi-filter below the aggregation",
-                lambda a: "BroadcastHashJoin LeftSemi" in a.text,
-            ),
-        ],
-    ),
-    (
-        "x2_repeated_spans (at-scale shape: auto-broadcast off)",
-        "x2_repeated_spans",
-        "Repeated-substring dedup: the gram table (doc_id, pos, md5) is "
-        "checkpointed once and feeds both the duplicated-hash aggregate "
-        "and the position semi join — the raw documents scan appears at "
-        "most once; the interval-union windows and the span group-by all "
-        "share the doc_id partitioning.",
-        [
-            (
-                "raw documents scanned at most once",
-                lambda a: a.text.count("documents.parquet") <= 1,
-            ),
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-        ],
-    ),
-    (
-        "x10_triangle_count (at-scale shape: auto-broadcast off)",
-        "x10_triangle_count",
-        "Degree-oriented triangle counting: edges and the oriented edge set "
-        "are checkpointed once, wedges self-join on the apex, and the "
-        "closure is a plain hash join even though the logical query is a "
-        "3-way theta join. The only nested-loop join is the r4 edge-count "
-        "fold: a 1-row broadcast aggregate attached to the (already tiny) "
-        "result — bounded by construction.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "at most the 1-row edge-count BroadcastNestedLoopJoin",
-                # numbered node headers only: formatted explain prints each
-                # operator twice (tree line + detail section)
-                lambda a: bnlj_count(a)
-                <= 1,
-            ),
-        ],
-    ),
-    (
-        "x2_minhash_banded (at-scale shape: auto-broadcast off)",
-        "x2_minhash_banded",
-        "Banded MinHash LSH: each shingle is md5-hashed ONCE; all per-seed affine "
-        "signature mins compute in a single (doc_id, lang) aggregation (no "
-        "per-seed row explode), band keys stack from the mins, candidates "
-        "come from an equi join on (lang, band, key), and only candidate "
-        "pairs pay the exact-Jaccard verify. The shingle table is "
-        "checkpointed once and feeds signature, sizes, and verify.",
-        [
-            ("raw documents scanned at most once",
-             lambda a: a.text.count("documents.parquet") <= 1),
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            ("no BroadcastNestedLoopJoin",
-             lambda a: "BroadcastNestedLoopJoin" not in a.text),
-        ],
-    ),
-    (
-        "x3_pq_codebooks",
-        "x3_pq_codebooks",
-        "Deterministic PQ training: the 4 Lloyd iterations are eager-"
-        "materialized checkpoint stages (broadcast 1024-row codebook join, "
-        "ONE map-side-combinable integer-distance aggregation per "
-        "iteration), so the visible plan fragment is the final codebook "
-        "read off the checkpoint boundary — no parquet re-scan, no Python, "
-        "no shuffle in the emit path. The per-iteration shape is asserted "
-        "on x3_pq_adc_topk below, whose encode pass runs the same "
-        "_pq_assign aggregation un-truncated.",
-        [
-            (
-                "emit path reads the checkpointed codebook, not parquet",
-                lambda a: ".parquet" not in a.text,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x3_pq_adc_topk",
-        "x3_pq_adc_topk",
-        "PQ search cascade: the trained codebook (checkpointed by the "
-        "trainer, session-cached since r6) and the per-probe distance "
-        "table both attach by BROADCAST, the encode pass is one map-side-"
-        "combinable integer aggregation, the ADC prune ranks exact int64 "
-        "sums, and only the 200-deep shortlist survivors pay the exact "
-        "cosine re-rank — full floats never shuffle.",
-        [
-            ("codebook + probe tables broadcast", lambda a: a.broadcast_joins >= 2),
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x2_paragraph_dedup (at-scale shape: auto-broadcast off)",
-        "x2_paragraph_dedup",
-        "Paragraph-grain near-dup: documents repartition on doc_id BEFORE "
-        "the paragraph explode (the compact single-file scan would "
-        "otherwise run the whole O(rows x paragraphs) stage on one core), "
-        "the paragraph table is checkpointed once and feeds signatures, "
-        "band keys and the exact verify, and candidates come from band "
-        "equi-joins only.",
-        [
-            (
-                "raw documents scanned at most once",
-                lambda a: a.text.count("documents.parquet") <= 1,
-            ),
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "no BroadcastNestedLoopJoin",
-                lambda a: "BroadcastNestedLoopJoin" not in a.text,
-            ),
-        ],
-    ),
-    (
-        "x8_table_stats",
-        "x8_table_stats",
-        "ANALYZE-TABLE shape: ONE orders scan fans out map-locally into the "
-        "5 per-column stat branches (row/null counts, typed min/max, mean "
-        "length, exact + HLL NDV), so the table is read once no matter how "
-        "many columns are profiled — the at-scale contract for a stats "
-        "collector.",
-        [
-            (
-                "orders scanned at most once",
-                lambda a: a.text.count("orders.parquet") <= 1,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "m4_lloyd_iterations",
-        "m4_lloyd_iterations",
-        "Deterministic Lloyd's as dataflow: each iteration is a CASE-"
-        "cascade argmin + ONE map-side-combined integer aggregation over "
-        "the checkpointed pixel table, with the K x 3 fixed-point "
-        "centroids attached as double LITERALS (r14: the bounded state "
-        "lives on the driver between iterations, the MLlib-KMeans shape "
-        "— one K*3-long collect per iteration replaces the former "
-        "checkpointed 1-row frame + BroadcastNestedLoopJoin attach, "
-        "removing a Catalyst compile + eager AQE sub-execution + two "
-        "BNLJs per iteration; 6.4 -> 3.4 s interleaved A/B at sf0.1, "
-        "bit-identical output by the same IEEE update tree). The "
-        "visible fragment is the final assignment/histogram pass over "
-        "the checkpointed pixel table; the 5-row centroid output table "
-        "attaches by broadcast hash join. No Python operators anywhere. "
-        "Prior floor history (r8, superseded): steady 4.6-4.8 s with the "
-        "in-plan centroid chain.",
-        [
-            (
-                "centroid output table attaches by broadcast",
-                lambda a: a.broadcast_joins >= 1,
-            ),
-            (
-                "no nested-loop join remains",
-                lambda a: "BroadcastNestedLoopJoin" not in a.text,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-            (
-                "pixel table comes off the checkpoint, not parquet",
-                lambda a: ".parquet" not in a.text,
-            ),
-        ],
-    ),
-    (
-        "x4_bm25_search",
-        "x4_bm25_search",
-        "BM25 more-like-this search: the probe-term table (terms + idf + "
-        "avgdl, ~250 rows) arrives by BROADCAST, so candidate generation "
-        "is a map-side join against the checkpointed corpus postings — "
-        "the corpus never shuffles for the probe join; scores aggregate "
-        "on (query, doc) and the top-k lowers to a windowed rank over "
-        "that small result.",
-        [
-            ("probe terms broadcast to the postings", lambda a: a.broadcast_joins >= 1),
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x8_corr_matrix",
-        "x8_corr_matrix",
-        "One-pass correlation matrix: ONE documents scan feeds a single "
-        "map-side-combinable aggregation carrying all 15 moment sums; the "
-        "6 upper-triangle correlations are emitted by INLINE over the "
-        "one-row result (a UNION of per-pair SELECTs would re-run the "
-        "scan per pair — measured 6 scans before this shape).",
-        [
-            (
-                "documents scanned exactly once",
-                lambda a: a.text.count("documents.parquet") == 1,
-            ),
-            ("no join in the plan", lambda a: "Join" not in a.text),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x3_power_iteration",
-        "x3_power_iteration",
-        "Matrix-free power iteration: the component table is checkpointed "
-        "once and each unrolled iteration is two keyed matvec "
-        "aggregations with the 64-row direction vector arriving by "
-        "broadcast — the Gram matrix never materializes. The visible "
-        "fragment is the final renormalization off the checkpoint "
-        "boundary; the per-iteration shape is the same two-aggregation "
-        "pattern the un-truncated first iteration shows.",
-        [
-            (
-                "no parquet re-scan in the emit path",
-                lambda a: ".parquet" not in a.text,
-            ),
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x9_shard_manifest",
-        "x9_shard_manifest",
-        "Deterministic training-shard manifest: ONE window = shuffle into "
-        "content-hash shard partitions + per-shard sort — the same physical "
-        "layout the sharded corpus write needs, so the manifest sort is the "
-        "write path's sort, not an extra pass.",
-        [
-            ("exactly one hash exchange", lambda a: a.hash_exchanges == 1),
-            ("no join in the plan", lambda a: "Join" not in a.text),
-        ],
-    ),
-    (
-        "ts_ewma",
-        "ts_ewma",
-        "Dyadic EWMA: all 15 LAGs plus the 30-term weighted reassembly ride "
-        "ONE Window node over ONE user_id exchange — Catalyst collapses the "
-        "identical inline window specs of the generated SQL; the scan reads "
-        "only the 3 consumed columns.",
-        [
-            ("exactly one hash exchange", lambda a: a.hash_exchanges == 1),
-            (
-                "exactly one Window node",
-                lambda a: len(re.findall(r"^\(\d+\) Window", a.text, re.M)) == 1,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-            (
-                "scan reads exactly 3 columns",
-                lambda a: a.read_widths == [3],
-            ),
-        ],
-    ),
-    (
-        "x10_kcore",
-        "x10_kcore",
-        "k-core peel, final emit path (the per-round lineage is truncated "
-        "by the localCheckpoint that flattens each peel iteration — the "
-        "PageRank discipline): two semi-equi-joins of the checkpointed "
-        "edge list against the surviving set, then one map-side-combinable "
-        "degree count. Each peel round upstream is the same two-semi-join "
-        "+ aggregate shape.",
-        [
-            ("semi joins are equi (no cartesian)", lambda a: "CartesianProduct" not in a.text),
-            (
-                "emit path reads the checkpoint, not parquet",
-                lambda a: ".parquet" not in a.text,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x10_adamic_adar",
-        "x10_adamic_adar",
-        "Link prediction: candidate pairs come ONLY from the wedge "
-        "self-equi-join on the customer key (never supplier x supplier), "
-        "contributions are pre-floored integers so the pair aggregation is "
-        "map-side combinable, and the global top-40 lowers to "
-        "TakeOrderedAndProject — no unpartitioned window, no full sort.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "global top-k is TakeOrderedAndProject",
-                lambda a: "TakeOrderedAndProject" in a.text,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x10_bfs_levels",
-        "x10_bfs_levels",
-        "Multi-source BFS, final emit path (each wave's lineage is cut by a "
-        "localCheckpoint): the emitted level table is a union of the "
-        "checkpointed per-wave frontiers — no join, no window, no re-scan of "
-        "parquet; all graph work happened inside the per-wave "
-        "semi-join/anti-join rounds upstream of the checkpoints.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "emit path reads the checkpoints, not parquet",
-                lambda a: ".parquet" not in a.text,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x10_hyperball",
-        "x10_hyperball",
-        "HyperBall, final emit path (per-radius lineage cut by "
-        "localCheckpoint): the harmonic-centrality reassembly is pure "
-        "projection over the checkpointed top-radius register table — 16 "
-        "packed registers per node, exact-BIGINT denominator, one fixed "
-        "IEEE tree floored to micro-units per node BEFORE the global sum. "
-        "No join, no parquet re-scan on the emit path.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "emit path reads the checkpoints, not parquet",
-                lambda a: ".parquet" not in a.text,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x10_random_walks",
-        "x10_random_walks",
-        "Hash-derandomized random walks, final emit path (per-step lineage "
-        "cut by localCheckpoint): the emitted corpus is a union of the "
-        "checkpointed per-step frontiers, each produced upstream by ONE "
-        "equi-join of the |V| x walks-per-node frontier against the rank-indexed "
-        "adjacency on (node, md5-draw mod degree) — never a neighbor-array "
-        "collect, never a cartesian.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "emit path reads the checkpoints, not parquet",
-                lambda a: ".parquet" not in a.text,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x4_cdc_chunks",
-        "x4_cdc_chunks",
-        "Content-defined chunking: ONE window cumsum assigns chunk ids "
-        "riding the doc_id partitioning, ONE groupBy reassembles chunks "
-        "engine-side (array_sort(collect_list), bounded by the ~16-token "
-        "expected chunk) — pure Catalyst, the scan reads only doc_id+text.",
-        [
-            (
-                "exactly one Window node",
-                lambda a: len(re.findall(r"^\(\d+\) Window", a.text, re.M)) == 1,
-            ),
-            ("no join in the plan", lambda a: "Join" not in a.text),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-            ("scan reads exactly 2 columns", lambda a: a.read_widths == [2]),
-        ],
-    ),
-    (
-        "x2_cdc_dedup",
-        "x2_cdc_dedup",
-        "Chunk-level dedup: first-occurrence-keeps decided by ONE MIN "
-        "window over the packed (doc_id, chunk_idx) per chunk_key — no "
-        "self-join anywhere, so a hot boilerplate chunk costs "
-        "O(occurrences), never O(occurrences^2); final doc aggregation is "
-        "map-side combinable integer sums.",
-        [
-            ("no join in the plan", lambda a: "Join" not in a.text),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-            ("single scan of documents", lambda a: a.text.count("documents.parquet") == 1),
-        ],
-    ),
-    (
-        "x10_community_lpa",
-        "x10_community_lpa",
-        "Seeded min-label propagation, final emit path (per-round lineage "
-        "cut by localCheckpoint — the PageRank discipline): the emitted "
-        "partition map is pure projection + ONE community-keyed window "
-        "count over the checkpointed fixpoint state; each round upstream "
-        "is one edge equi-join + a map-side-combinable MIN on the packed "
-        "(dist, seed) BIGINT. No parquet re-scan, no join, no Python on "
-        "the emit path.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "emit path reads the checkpoint, not parquet",
-                lambda a: ".parquet" not in a.text,
-            ),
-            (
-                "exactly one hash exchange (the community window)",
-                lambda a: a.hash_exchanges == 1,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x10_walk_pairs",
-        "x10_walk_pairs",
-        "Skip-gram pairs + banded negative sampling, emit path (the walk "
-        "corpus and the positive-pair table are checkpointed; the weight "
-        "cumsum interval table too): positives self-equi-join the corpus "
-        "on the walk key (bounded groups), negative draws resolve via the "
-        "BANDED interval-containment equi-join — the only nested-loop "
-        "broadcasts in the plan are the 2-row slot table and the 1-row "
-        "total weight; the node table is never nested-looped.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "emit path reads the checkpoints, not parquet",
-                lambda a: ".parquet" not in a.text,
-            ),
-            (
-                # formatted explain prints each op twice (numbered header +
-                # detail) — count numbered nodes, the audit discipline
-                # == 2, not <= 2: a <=N claim is vacuous at 0 (r8 lesson) —
-                # exactly the slot-table and total-weight broadcasts exist,
-                # and a refactor that removes or adds one must re-assert.
-                "only the 2-row slot / 1-row total reach by nested loop",
-                lambda a: bnlj_count(a) == 2,
-            ),
-            (
-                "the band interval join is an equi join",
-                lambda a: a.broadcast_joins + a.sort_merge_joins >= 2,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x5_spacesaving_topk",
-        "x5_spacesaving_topk",
-        "Batch SpaceSaving twin: the corpus-wide work is ONE "
-        "map-side-combinable (shard, term) count; the python fold sees "
-        "only each shard's VOCABULARY (never corpus rows) through a "
-        "single applyInPandas stage keyed on the shard. Three hash "
-        "exchanges total: the pre-explode repartition, the count "
-        "aggregation, and the shard regroup feeding the kernel.",
-        [
-            ("no join in the plan", lambda a: "Join" not in a.text),
-            ("exactly one Python stage (the fold)", lambda a: a.python_map_operators == 1),
-            ("single scan of documents", lambda a: a.text.count("documents.parquet") == 1),
-            ("at most 3 hash exchanges", lambda a: a.hash_exchanges <= 3),
-        ],
-    ),
-    (
-        "x9_rag_pipeline",
-        "x9_rag_pipeline",
-        "The composed retrieval product (chunk -> chunk-BM25 max-pool -> "
-        "IVF multiprobe + exact rerank -> integer RRF -> serving join), "
-        "served from a RagIndex whose EVERY member is checkpointed (tf, "
-        "df, corpus constants, IVF cells, serving dim) — so the emit plan "
-        "re-scans NO parquet at all, the property that lets the streaming "
-        "twin serve micro-batches without touching the corpus. The "
-        "bounded top-k side broadcasts into the serving join (J1 shape); "
-        "fusion joins two <= queries x LANE_K rank lists; no Python "
-        "anywhere.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "NO parquet scan on the emit plan (whole index checkpointed)",
-                lambda a: ".parquet" not in a.text,
-            ),
-            ("serving/probe joins broadcast", lambda a: a.broadcast_joins >= 1),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x10_modularity",
-        "x10_modularity",
-        "Newman Q of the LPA partition, emit path (labels and the "
-        "label-joined edge list are checkpointed): e2/d_sum come from ONE "
-        "map-side-combinable aggregation on the community key — no "
-        "COUNT DISTINCT, so no Expand in the plan; community sizes "
-        "aggregate the |V|-sized label table separately; the 1-row 2m "
-        "total returns by bounded broadcast. No parquet re-scan on the "
-        "emit path.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "emit path reads the checkpoints, not parquet",
-                lambda a: ".parquet" not in a.text,
-            ),
-            (
-                "no Expand (edge agg avoids COUNT DISTINCT)",
-                lambda a: "Expand" not in a.text,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x3_ann_eval",
-        "x3_ann_eval",
-        "ANN quality evaluation: recall@3 + MRR of the IVF nprobe=2 "
-        "cascade against the exact brute-force top-3. Both rank lists are "
-        "bounded (probes x k), so the hit detection is an equi LEFT join "
-        "of two tiny tables — per-probe metrics are integer arithmetic on "
-        "integer ranks, the exact lane is bounded to the probe set, and "
-        "the IVF lane is the shortlist->rerank cascade (never all-pairs). "
-        "The single nested-loop join is the probe-set self-exclusion "
-        "(NOT vec_id = vec_id over the bounded probe rows), not a "
-        "corpus-sized product.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "rank joins are equi joins (SMJ/BHJ), not nested loops",
-                lambda a: a.sort_merge_joins + a.broadcast_joins >= 3,
-            ),
-            (
-                "exactly one BNLJ: the bounded probe self-exclusion",
-                lambda a: bnlj_count(a) == 1,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "m8_calibration",
-        "m8_calibration",
-        "Model-calibration evaluation (reliability bins + Brier partials): "
-        "the sigmoid confidence and the fixed-width bin id are map-side "
-        "Catalyst expressions over the engine-side logit, so the WHOLE "
-        "evaluation is one pruned scan into one map-combinable hash "
-        "aggregate of <= 10 rows — no rank/NTILE (an equal-count decile "
-        "would global-sort the corpus in one task), no join, no Python.",
-        [
-            ("no joins at all", lambda a: "Join" not in a.text),
-            (
-                "exactly one hash exchange (the 10-row bin aggregate)",
-                lambda a: a.hash_exchanges == 1,
-            ),
-            (
-                "scan pruned to the 3 consumed columns",
-                lambda a: a.read_widths and max(a.read_widths) <= 3,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x2_dedup_eval (at-scale shape: auto-broadcast off)",
-        "x2_dedup_eval",
-        "LSH quality evaluation: ground-truth exact-Jaccard pairs vs the "
-        "banded-MinHash candidate/verified sets, per language. ONE "
-        "checkpointed shingle table (raw grams feed the md5 minhash "
-        "bands AND the ground-truth self-join — the truth lane is exact "
-        "on the gram strings, free of the xxhash64-collision caveat the "
-        "detection lanes document; the xxhash64 column keys the "
-        "candidate/verify joins — 8-byte shuffle keys where the join "
-        "grades the detection spelling); one shared sizes aggregation; "
-        "metrics are integer division on per-lang counts.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "emit path reads the checkpoints, not parquet",
-                lambda a: ".parquet" not in a.text,
-            ),
-            (
-                "every join is an equi join (zero nested-loop broadcasts)",
-                lambda a: bnlj_count(a) == 0,
-            ),
-            (
-                # the xxhash64 expression itself sits BEFORE the checkpoint
-                # (lineage-truncated), so assert its effect on JOIN-KEY
-                # lines: the candidate/VERIFY joins key on the LONG-typed
-                # s#NNL hash, while the GROUND-TRUTH self-join keys on the
-                # raw string gram BY DESIGN (exactness of the truth lane,
-                # ADVICE r10) — exactly one join's key-line pair carries a
-                # string-typed s
-                "verify joins key on the 8-byte hashed s (long); only the "
-                "ground-truth self-join keys on raw grams",
-                lambda a: any(
-                    "keys" in ln and re.search(r"s#\d+L", ln)
-                    for ln in a.text.splitlines()
-                )
-                and sum(
-                    1
-                    for ln in a.text.splitlines()
-                    if "keys" in ln and re.search(r"s#\d+(?![0-9L])", ln)
-                )
-                == 2,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x9_data_factory",
-        "x9_data_factory",
-        "The corpus-build flagship, emit path: quality gate -> exact + "
-        "LSH fuzzy dedup (CC keep-best) -> 5-gram decontamination -> DSIR "
-        "x temperature-mix selection -> context-bin packing -> "
-        "content-addressed sharding, over ONE projected documents scan "
-        "(the base checkpoint; every stage consumes checkpoints, so the "
-        "emit plan re-scans ZERO parquet). The bench gram index, DSIR "
-        "bucket models (256 rows), 1-row totals, and per-source quotas "
-        "all broadcast; packing/sharding are two keyed windows over the "
-        "budget-bounded selected set. The only nested-loop broadcast is "
-        "the 1-row DSIR totals table.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "emit path reads the checkpoints, not parquet",
-                lambda a: ".parquet" not in a.text,
-            ),
-            (
-                "only the 1-row DSIR totals reaches by nested loop",
-                lambda a: bnlj_count(a) == 1,
-            ),
-            (
-                "models/quota/bench-grams broadcast",
-                lambda a: a.broadcast_joins >= 4,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x1_ingest_growing",
-        "x1_ingest_growing",
-        "Three sequential arrival batches admitted against a GROWING "
-        "index (ingest_admit_fold): each batch's admitted docs fold back "
-        "as O(admitted) LSM delta checkpoints, so batch k dedups against "
-        "residents AND batches < k. ONE projected documents scan (the "
-        "base checkpoint) feeds the resident index build and all three "
-        "batch slices; every admission consumes checkpoints, so the emit "
-        "plan re-scans ZERO parquet. All joins are equi (band-key "
-        "probes, md5 anti gates, candidate-restricted verify) — no "
-        "nested-loop broadcast anywhere.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "emit path reads the checkpoints, not parquet",
-                lambda a: ".parquet" not in a.text,
-            ),
-            (
-                "every join is an equi join (zero nested-loop broadcasts)",
-                lambda a: bnlj_count(a) == 0,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x1_ingest_compaction",
-        "x1_ingest_compaction",
-        "Keep-best compaction over the growing ingest's retained corpus: "
-        "the near-dup pass runs on the index's STORED artifacts — the "
-        "band table self-joined on (lang, band, bkey) restricted to "
-        "exact survivors, verified by the shared exact_jaccard_verify "
-        "reading the index's checkpointed shingles with precomputed "
-        "sizes — so compaction re-shingles NOTHING and the only text "
-        "expression it adds is one md5 window over retained rows. "
-        "Candidates stay banded (never all-pairs), components are the "
-        "size-gated label propagation, the fate join is broadcast-sized "
-        "equi joins; the one documents scan is the ingest's own base "
-        "checkpoint.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "every join is an equi join (zero nested-loop broadcasts)",
-                lambda a: bnlj_count(a) == 0,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x9_rag_eval",
-        "x9_rag_eval",
-        "Retrieval-quality evaluation: the production fused list (the "
-        "rag_serve lane helpers — shared BM25 checkpoint + IVF dense) "
-        "graded against the exact composite truth (same BM25 fused with "
-        "EXHAUSTIVE cosine over the checkpointed vector table). "
-        "Everything downstream of rag_index reads checkpoints; the only "
-        "nested-loop broadcast is the bounded RAG_PROBES-row probe "
-        "frame's self-exclusion in the exhaustive truth lane (the "
-        "x3_ann_eval precedent); IDCG is the compile-time constant "
-        "_NDCG_IDCG_MICRO and the discounts are precomputed "
-        "_NDCG_DISC_MICRO literals — no transcendental engine-side, no "
-        "per-query idcg aggregation at all.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "emit path reads the checkpoints, not parquet",
-                lambda a: ".parquet" not in a.text,
-            ),
-            (
-                "only the bounded probe self-exclusion reaches by nested loop",
-                lambda a: bnlj_count(a) == 1,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x3_ivf_pq_topk",
-        "x3_ivf_pq_topk",
-        "Residual IVF-PQ composed index (inverted lists whose entries ARE "
-        "the PQ codes, encoded against the rn=1 cell centroid's quantized "
-        "subvectors — true FAISS IVFADC): the cell-bucketed residual code "
-        "lists are checkpointed once, the probe side (2 cells x queries) "
-        "and the PER-(query, probed cell) integer distance tables (each "
-        "probe's residual vs THAT cell's centroid, centroids a KB-sized "
-        "broadcast re-derived from the index's own vector table) "
-        "broadcast into them on (cid, m, j), and the ADC prune is one "
-        "map-side-combinable integer SUM — full float vectors are read "
-        "only by the shortlist re-rank. Every join is either a broadcast "
-        "of bounded probe/codebook/centroid state or an index-build equi "
-        "join; no nested-loop broadcast anywhere.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "every join is an equi join (zero nested-loop broadcasts)",
-                lambda a: bnlj_count(a) == 0,
-            ),
-            (
-                "probe/ptab/codebook state broadcasts (>= 4 BHJ)",
-                lambda a: a.broadcast_joins >= 4,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x3_ivf_pq_add",
-        "x3_ivf_pq_add",
-        "Add-after-train (FAISS index.add): base IVF-PQ built (and "
-        "trained) on the vec_id < IVFPQ_ADD_SPLIT prefix, arrivals "
-        "coarse-ranked against the FROZEN centroids (one broadcast "
-        "argmin), residualized against the frozen KB-sized csub "
-        "broadcast, encoded with the frozen broadcast codebook, and "
-        "UNIONED into ranked/invl — no resident row rewritten, no "
-        "retraining, O(arrivals) work; the serve tail is the standard "
-        "ivf_pq_serve broadcast cascade. Same plan discipline as "
-        "x3_ivf_pq_topk: every join is an equi join or a bounded "
-        "broadcast; nothing corpus-vs-corpus.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "every join is an equi join (zero nested-loop broadcasts)",
-                lambda a: bnlj_count(a) == 0,
-            ),
-            (
-                "probe/ptab/codebook/centroid state broadcasts (>= 4 BHJ)",
-                lambda a: a.broadcast_joins >= 4,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x3_truncation_eval",
-        "x3_truncation_eval",
-        "Matryoshka truncation evaluation: full-dim truth and half-dim "
-        "detector are the SAME _brute_ranked_topk spelling — each lane is "
-        "one corpus pass with the bounded probe frame broadcast, so the "
-        "only nested-loop joins are the two bounded probe self-exclusions "
-        "(the x3_cosine_topk shape, twice); the hit detection is an equi "
-        "LEFT join of two <= probes x k rank lists and the metrics are "
-        "integer arithmetic on integer ranks.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "exactly two BNLJ: the two bounded probe self-exclusions",
-                lambda a: bnlj_count(a) == 2,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x3_ivf_pq_eval",
-        "x3_ivf_pq_eval",
-        "IVF-PQ cascade evaluation: the cascade side is the serving plan "
-        "(checkpoint-fed inverted lists, broadcast probes/ptab/codebook), "
-        "the truth side is one bounded-probe brute pass, and the hit "
-        "detection is an equi LEFT join of two <= probes x k rank lists "
-        "with integer metrics. The only nested-loop join is the truth "
-        "lane's bounded probe self-exclusion (the x3_ann_eval precedent).",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "exactly one BNLJ: the truth lane's bounded probe self-exclusion",
-                lambda a: bnlj_count(a) == 1,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-    (
-        "x4_decontam_eval",
-        "x4_decontam_eval",
-        "Sampled-index decontamination recall vs the full 5-gram truth: "
-        "the distinct bench-gram table is checkpointed once and BOTH the "
-        "truth join and the md5-sampled detector join broadcast it into "
-        "one streaming pass each over the corpus grams (the "
-        "x4_decontaminate shape); the per-doc distinct-gram aggregate and "
-        "the <= 4-row severity rollup are the only exchanges, and the "
-        "truth-vs-detected alignment is a doc_id equi join.",
-        [
-            ("no CartesianProduct", lambda a: "CartesianProduct" not in a.text),
-            (
-                "bench-gram index broadcasts into both passes (>= 2 BHJ)",
-                lambda a: a.broadcast_joins >= 2,
-            ),
-            (
-                "every join is an equi join (zero nested-loop broadcasts)",
-                lambda a: bnlj_count(a) == 0,
-            ),
-            ("no Python operators", lambda a: a.python_map_operators == 0),
-        ],
-    ),
-]
 
 
 def main() -> None:
     spark = get_spark(app_name="gen-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    specs = registry()
     out = [
         "# PLANS — annotated physical plans (generated by tools/gen_plans.py)",
         "",
-        "`explain('formatted')` output at sf0.001 for representative queries,",
-        "with the scale-relevant plan properties. Every claim below is",
-        "asserted against the plan text at generation time — regenerating",
-        "this file IS the plan regression check (the same predicates run in",
-        "tests/test_plans.py).",
+        "`explain('formatted')` output at sf0.001, one section per row of the",
+        "plan-claim table (`iii_aibigdata_capstone_spark/plans/claims.py`).",
+        "Every claim below held when this file was generated, and the",
+        "registry plan sweep in tests/test_plans.py asserts the same table.",
         "",
     ]
-    for title, key, notes, claims in GALLERY:
-        no_broadcast = "auto-broadcast off" in title
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        if no_broadcast:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            df = flagship(spark, SF_DIR) if key is None else specs[key].builder(spark, SF_DIR)
-            a = audit(df)
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        failed = [c for c, pred in claims if not pred(a)]
-        if failed:
-            raise SystemExit(f"{title}: plan claims no longer hold: {failed}")
-        out.append(f"## {title}")
-        out.append("")
-        out.append(notes)
-        out.append("")
-        out.extend(f"- ✅ {c}" for c, _ in claims)
-        out.append("")
-        out.append("```")
-        out.append(a.text.rstrip())
-        out.append("```")
-        out.append("")
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    broken = []
+    for row in ROWS:
+        a = audit_lane(spark, SF_DIR, row.lane, row.at_scale)
+        broken += [f"{row.title}: {c}" for c in row.failures(a)]
+        out += [f"## {row.title}", "", row.note, ""]
+        out += [f"- ✅ {c}" for c, _ in row.claims]
+        out += ["", "```", a.text.rstrip(), "```", ""]
+    if broken:
+        raise SystemExit("plan claims no longer hold:\n" + "\n".join(broken))
+    path = os.path.join(REPO, "PLANS.md")
     with open(path, "w") as f:
         f.write("\n".join(out))
-    print(f"wrote {path}: {len(GALLERY)} plans")
+    print(f"wrote {path}: {len(ROWS)} plans")
 
 
 if __name__ == "__main__":

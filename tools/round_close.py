@@ -4,7 +4,7 @@ claims and exit non-zero if any artifact disagrees with the live registry.
 
     python tools/round_close.py
 
-Checks 1-6 are read-only (all pure-python, no SparkSession); step 7 WRITES
+Checks 1-5 are read-only (all pure-python, no SparkSession); step 6 WRITES
 one repo file (BENCH_CANONICAL_r{N}.json — the round-stamped snapshot of a
 canonical BENCH_FULL.json, so the driver's post-round in-place overwrite
 cannot shadow the committed run).
@@ -15,9 +15,7 @@ cannot shadow the committed run).
      generation stamp matches the registry size).
   3. bench.py HEADLINE names all resolve in the registry.
   4. tools/scale_probe.py DEFAULT names all resolve (plus 'flagship').
-  5. tools/gen_plans.py GALLERY keys all resolve, and PLANS.md contains a
-     section for each (PLANS regenerated after gallery edits).
-  6. Every bench HEADLINE query whose latest benched time exceeds 1 s —
+  5. Every bench HEADLINE query whose latest benched time exceeds 1 s —
      or that is too new to have a benched time — also appears in the
      scale-probe DEFAULT list (sub-second lanes are exempt; the two lists
      drifted apart on the heavy lanes in r6/r7 — VERDICT r7 item 1).
@@ -90,19 +88,7 @@ def main() -> int:
     if bad:
         errors.append(f"scale_probe.py DEFAULT names not in registry: {bad}")
 
-    # 5. gen_plans gallery resolves and PLANS.md regenerated after edits
-    import gen_plans  # noqa: E402
-
-    plans = open(os.path.join(REPO, "PLANS.md")).read()
-    for title, key, _notes, _claims in gen_plans.GALLERY:
-        if key is not None and key not in specs:  # None = flagship
-            errors.append(f"gen_plans.py GALLERY key not in registry: {key}")
-        if f"## {title}" not in plans:
-            errors.append(
-                f"PLANS.md has no section '## {title}' (run tools/gen_plans.py)"
-            )
-
-    # 6. Every HEADLINE query whose latest benched time exceeds 1 s — or that
+    # 5. Every HEADLINE query whose latest benched time exceeds 1 s — or that
     # is new enough to have no benched time yet — must be in probe DEFAULT
     # (the sync rule: both lists cover every heavy lane).
     # NOTE: this reads the COMMITTED BENCH_FULL.json, not a live run, so a
@@ -133,16 +119,16 @@ def main() -> int:
             print(f"  - {e}")
         return 1
 
-    # 7. Round-stamp the canonical bench sidecar (VERDICT r10 ask #6):
+    # 6. Round-stamp the canonical bench sidecar (VERDICT r10 ask #6):
     # the driver re-runs bench.py after the round closes and overwrites
     # BENCH_FULL.json in place, which would shadow the committed canonical
     # run. Snapshotting here pins the run round_close certified; the
     # round number is the current (in-progress) round = 1 + the newest
     # CORRECTNESS_r* the driver has recorded. Guards (review r11): only a
     # CANONICAL-shaped artifact is snapshotted (sf0.1, covering the full
-    # HEADLINE + SPECIALS — the README-documented sf0.01 run and
-    # BENCH_ONLY smoke subsets also overwrite BENCH_FULL.json in place
-    # and must never masquerade as the canonical run), and a BENCH_FULL
+    # HEADLINE + SPECIALS — the README-documented sf0.01 run also
+    # overwrites BENCH_FULL.json in place and must never masquerade as
+    # the canonical run), and a BENCH_FULL
     # OLDER than the newest CORRECTNESS artifact is skipped (an
     # early-next-round round_close run before any fresh bench would
     # otherwise mislabel last round's run — possibly the driver's
@@ -229,7 +215,7 @@ def main() -> int:
 
     print(
         f"round_close: OK — {n_queries} queries / {n_oracles} oracles; "
-        "README, PARITY, PLANS, HEADLINE, DEFAULT all agree"
+        "README, PARITY, HEADLINE, DEFAULT all agree"
     )
     return 0
 
