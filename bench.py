@@ -7,13 +7,16 @@ Prints ONE JSON line:
 
 Each query is executed to completion with the ``noop`` sink (full plan
 runs, nothing collected to the driver — measures the engine, not py4j
-serialization).
+serialization). Every lane runs SAMPLES (3) times and reports the median
+total; the sidecar also keeps each lane's raw totals, its first (cold)
+sample and its median builder-call time (``sample_lane`` is the one lane
+timer; ``tools/scale_probe.py`` reuses it).
 
 Structure (round 9): the headline list runs as N_CHUNKS (4) FRESH-JVM
 chunks executed SERIALLY — ~90 query executions in one shared JVM
 accumulate code-cache/GC/fragmentation drift that lands on
 whichever queries run late, which is why every prior round's bench showed
-diffuse >12% movers on untouched lanes (adjudicated noise in BENCH_NOTES).
+diffuse >12% movers on untouched lanes.
 A fresh JVM per ~22-query chunk bounds the contamination window to one
 chunk; chunks never run concurrently (32 threads each would contend for
 the same cores and corrupt every number). Each chunk pays its own warmup
@@ -27,6 +30,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -145,42 +149,133 @@ SPECIALS = ["flagship", "st_stream_drain"]
 N_CHUNKS = 4
 
 
-# Round-over-round adjudications the judge asked to carry with the metric.
-# The ledger itself is the TRACKED, APPEND-ONLY BENCH_NOTES.md (promoted
-# from this module's former inline string, VERDICT r11 item 3): history
-# survives the driver's in-place overwrite of BENCH_FULL.json, and README/
-# commit references to "BENCH_NOTES" resolve to a real file. Embedded
-# verbatim into every artifact's "notes" field so the artifact stays
-# self-contained.
-def bench_notes() -> str:
-    # The file is TRACKED — absence means a broken checkout, and silently
-    # substituting the placeholder would strip the adjudication ledger
-    # from committed artifacts (ADVICE r12). Fail loudly.
-    with open(os.path.join(REPO, "BENCH_NOTES.md")) as fh:
-        return fh.read()
+SAMPLES = 3  # every lane, every run: the same fixed count
+
+# The per-lane maps a chunk reports and the sidecar carries.
+RECORDS = ("timings", "first_sample", "samples", "build_s", "errors")
+
+
+def sf_of(sf_dir: str) -> float:
+    return float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
 
 def run_to_completion(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def run_slice(
-    names: list[str],
-) -> tuple[dict[str, float], dict[str, float], dict[str, str]]:
-    """Time the named entries in THIS process's (fresh) JVM. Returns
-    ``(best, first, errors)``: ``best`` is the adaptive best-of-N min
-    (steady-state engine cost — the headline number), ``first`` each
-    lane's FIRST-sample wall-clock (r13 verdict ask #5: lanes that build
-    a session-cached index pay the build only in sample 1 and serve from
-    it in later samples, so the min alone under-reports the cold cost;
-    stamping the first sample makes the build cost a committed,
-    decay-auditable number instead of ledger prose). first >= best by
-    construction; a large gap marks a build-then-serve lane, not drift."""
+def warm_up(spark, sf_dir: str) -> None:
+    """The flagship primes JVM/codegen; the identity mapInPandas primes the
+    Python worker pool (the first pandas-UDF query otherwise pays ~6s of
+    worker spin-up that is startup cost, not query cost)."""
+    from iii_aibigdata_capstone_spark.queries import flagship
+
+    run_to_completion(flagship(spark, sf_dir))
+    run_to_completion(
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id")
+        .mapInPandas(lambda it: it, "doc_id long")
+    )
+
+
+def sample_lane(spark, builder, sf_dir: str) -> list[tuple[float, float]]:
+    """Run one lane SAMPLES times: ``(build_s, write_s)`` per sample, the
+    builder call (Python + py4j plan construction + any eager work inside
+    it) timed apart from the noop write that executes the plan. A JVM GC
+    runs before each sample, off the clock, so prior garbage is not
+    charged to this lane."""
+    samples = []
+    for _ in range(SAMPLES):
+        spark._jvm.System.gc()
+        t0 = time.perf_counter()
+        df = builder(spark, sf_dir)
+        t1 = time.perf_counter()
+        run_to_completion(df)
+        samples.append((t1 - t0, time.perf_counter() - t1))
+    return samples
+
+
+# Streaming drain probe (§2.10): custom offset-tracked stream source ->
+# watermarked tumbling count -> memory sink, availableNow. Times the
+# micro-batch engine end to end (planning, offset slicing, stateful
+# window store), not just batch operators; the drain runs inside the
+# builder call, so its time lands in build_s. Row count scales with SF so
+# the probe tracks data volume like every other entry.
+def stream_drain(spark, sf_dir: str):
+    from pyspark.sql import functions as SF
+
+    from iii_aibigdata_capstone_spark.sources import register
+
+    register(spark)
+    n_rows = int(200_000 * (sf_of(sf_dir) / 0.1))
+    # Size the state-store partition count to the probe's throughput
+    # (unlike stateless shuffles, every state partition pays a store
+    # open/commit per micro-batch, so 32 partitions for a 4-type key
+    # space is pure overhead; a deployment sizes this to key
+    # cardinality x throughput). Restored after the probe.
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    q = None
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        stream = (
+            spark.readStream.format("synthetic_events")
+            .option("rows", n_rows)
+            .option("rowsPerBatch", max(1, n_rows // 4))
+            .load()
+            .withColumn(
+                "ts",
+                SF.timestamp_seconds(SF.lit(1_700_000_000) + SF.col("event_id") % 3600),
+            )
+        )
+        agg = (
+            stream.withWatermark("ts", "10 minutes")
+            .groupBy(SF.window("ts", "5 minutes"), "event_type")
+            .agg(SF.count(SF.lit(1)).alias("n"), SF.sum("value").alias("sv"))
+        )
+        name = f"bench_stream_{uuid.uuid4().hex[:8]}"
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation", tempfile.mkdtemp(prefix="bench_st_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+    finally:
+        if q is not None:
+            q.stop()
+        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    return spark.table(name).limit(0)  # sample_lane drains via noop
+
+
+def time_lanes(spark, builders: dict, sf_dir: str) -> dict[str, dict]:
+    """Sample every ``{name: builder}`` lane. Per lane: ``timings`` is the
+    median of the SAMPLES build+write totals (the headline number),
+    ``first_sample`` sample 1's total (the lane's cold cost: its
+    first-time codegen and imports land there), ``samples`` all totals and
+    ``build_s`` the median builder-call time. ``errors`` holds the lanes
+    that raised: one broken query must not hide the rest."""
+    out: dict[str, dict] = {k: {} for k in RECORDS}
+    for name, builder in builders.items():
+        try:
+            samples = sample_lane(spark, builder, sf_dir)
+        except Exception as ex:
+            out["errors"][name] = f"{type(ex).__name__}: {ex}"[:200]
+            continue
+        totals = [round(b + w, 3) for b, w in samples]
+        out["timings"][name] = round(statistics.median(totals), 3)
+        out["first_sample"][name] = totals[0]
+        out["samples"][name] = totals
+        out["build_s"][name] = round(statistics.median(b for b, _ in samples), 3)
+    return out
+
+
+def run_slice(names: list[str]) -> dict[str, dict]:
+    """Time the named entries in THIS process's (fresh) JVM."""
     from iii_aibigdata_capstone_spark.queries import flagship, registry
     from iii_aibigdata_capstone_spark.session import get_spark
 
-    sf = float(os.path.basename(SF_DIR.rstrip("/")).replace("sf", "") or 0.1)
-    # Each chunk times ~25 executions; 24g keeps them out of old-gen pressure.
+    # Each chunk times ~25 lanes; 24g keeps them out of old-gen pressure.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
     spark = get_spark(app_name="iii-capstone-bench")
     # OFF, not ERROR: benign ERROR-level shutdown noise (DAGScheduler
@@ -188,120 +283,11 @@ def run_slice(
     # the metric line and can camouflage a real failure. Real failures are
     # reported through the JSON "errors" dict — the reliable channel.
     spark.sparkContext.setLogLevel("OFF")
-
-    # Warmup: the flagship primes JVM/codegen; the identity mapInPandas
-    # primes the Python worker pool (first pandas-UDF query otherwise pays
-    # ~6s of worker spin-up that is startup cost, not query cost).
-    run_to_completion(flagship(spark, SF_DIR))
-    run_to_completion(
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        .select("doc_id")
-        .mapInPandas(lambda it: it, "doc_id long")
-    )
-
+    warm_up(spark, SF_DIR)
     specs = registry()
-    timings: dict[str, float] = {}
-    firsts: dict[str, float] = {}
-    errors: dict[str, str] = {}
-
-    def timed(builder) -> tuple[float, float]:
-        # Adaptive best-of-N: single runs carry scheduler/GC jitter even in
-        # a fresh JVM (JIT still ramping). Rerun until two samples agree
-        # within 20% (max 4; r14: up to 6 while still DESCENDING), and
-        # report the min — the steady-state engine cost the number is
-        # meant to track.
-        samples: list[float] = []
-        for _ in range(6):
-            spark._jvm.System.gc()  # drain prior queries' garbage off the clock
-            t0 = time.time()
-            run_to_completion(builder(spark, SF_DIR))
-            samples.append(time.time() - t0)
-            # Sub-3s queries need >= 3 samples before the agreement break:
-            # the r5 x2_simhash "drift" was two correlated still-warming
-            # samples agreeing at 1.65s while steady state was 1.31s.
-            need = 3 if min(samples) < 3.0 else 2
-            # r14 measurement fix (documented in OPTIMIZATION_r14.md and
-            # the BENCH_NOTES r14 entry): if the LAST sample improved the
-            # running min by >15%, the lane is still on its JIT/codegen
-            # ramp (x3_pq_codebooks decays 19 -> 12 -> 6 -> 5 -> 4.3 in a
-            # fresh JVM) — two adjacent warming samples can "agree" within
-            # 20% while steady state is far lower, exactly the r5 trap at
-            # a longer ramp. Keep sampling while descending, up to 6.
-            # Metric semantics unchanged: still the best-of-N min; steady
-            # lanes still stop after 2-3 samples. The old 4-sample numbers
-            # remain committed in BENCH_r14 "before" artifacts.
-            if len(samples) >= need:
-                lo, lo2 = sorted(samples)[:2]
-                descending = len(samples) >= 2 and samples[-1] <= 0.85 * min(
-                    samples[:-1]
-                )
-                if lo2 - lo <= max(0.2 * lo, 0.1) and not descending:
-                    break
-        return round(min(samples), 3), round(samples[0], 3)
-
-    # Streaming drain probe (§2.10): custom offset-tracked stream source ->
-    # watermarked tumbling count -> memory sink, availableNow. Times the
-    # micro-batch engine end to end (planning, offset slicing, stateful
-    # window store), not just batch operators. Row count scales with SF so
-    # the probe tracks data volume like every other entry.
-    def stream_drain(spark, _sf_dir):
-        from pyspark.sql import functions as SF
-
-        from iii_aibigdata_capstone_spark.sources import register
-
-        register(spark)
-        n_rows = int(200_000 * (sf / 0.1))
-        # Size the state-store partition count to the probe's throughput
-        # (unlike stateless shuffles, every state partition pays a store
-        # open/commit per micro-batch, so 32 partitions for a 4-type key
-        # space is pure overhead; a deployment sizes this to key
-        # cardinality x throughput). Restored after the probe.
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        q = None
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            stream = (
-                spark.readStream.format("synthetic_events")
-                .option("rows", n_rows)
-                .option("rowsPerBatch", max(1, n_rows // 4))
-                .load()
-                .withColumn(
-                    "ts",
-                    SF.timestamp_seconds(SF.lit(1_700_000_000) + SF.col("event_id") % 3600),
-                )
-            )
-            agg = (
-                stream.withWatermark("ts", "10 minutes")
-                .groupBy(SF.window("ts", "5 minutes"), "event_type")
-                .agg(SF.count(SF.lit(1)).alias("n"), SF.sum("value").alias("sv"))
-            )
-            name = f"bench_stream_{uuid.uuid4().hex[:8]}"
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="bench_st_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-        finally:
-            if q is not None:
-                q.stop()
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        return spark.table(name).limit(0)  # timed() drains via noop
-
-    for name in names:
-        try:
-            if name == "flagship":
-                timings[name], firsts[name] = timed(flagship)
-            elif name == "st_stream_drain":
-                timings[name], firsts[name] = timed(stream_drain)
-            else:
-                timings[name], firsts[name] = timed(specs[name].builder)
-        except Exception as ex:  # one broken query must not hide the rest
-            errors[name] = f"{type(ex).__name__}: {ex}"[:200]
-    return timings, firsts, errors
+    special = {"flagship": flagship, "st_stream_drain": stream_drain}
+    builders = {n: special[n] if n in special else specs[n].builder for n in names}
+    return time_lanes(spark, builders, SF_DIR)
 
 
 def chunked(names: list[str], n_chunks: int) -> list[list[str]]:
@@ -320,14 +306,11 @@ def chunked(names: list[str], n_chunks: int) -> list[list[str]]:
 def main() -> None:
     parser = argparse.ArgumentParser()
     parser.add_argument("--slice", help="comma-separated entry names (chunk-child mode)")
-    parser.add_argument("--out", help="write {timings, errors} JSON here (chunk-child mode)")
+    parser.add_argument("--out", help="write the chunk's lane records JSON here (chunk-child mode)")
     args = parser.parse_args()
 
     if args.slice:
-        timings, firsts, errors = run_slice(args.slice.split(","))
-        payload = json.dumps(
-            {"timings": timings, "first_sample": firsts, "errors": errors}
-        )
+        payload = json.dumps(run_slice(args.slice.split(",")))
         if args.out:
             with open(args.out, "w") as fh:
                 fh.write(payload + "\n")
@@ -335,14 +318,9 @@ def main() -> None:
             print(payload, flush=True)
         return
 
-    sf = float(os.path.basename(SF_DIR.rstrip("/")).replace("sf", "") or 0.1)
-    # read the ledger BEFORE any lane runs (review r13): it is embedded in
-    # the artifact at the end, and failing on a broken checkout AFTER the
-    # ~220s timed run would discard every timing
-    notes = bench_notes()
-    timings: dict[str, float] = {}
-    firsts: dict[str, float] = {}
-    errors: dict[str, str] = {}
+    sf = sf_of(SF_DIR)
+    parts: dict[str, dict] = {k: {} for k in RECORDS}
+    timings, errors = parts["timings"], parts["errors"]
     for chunk in chunked(HEADLINE + SPECIALS, N_CHUNKS):
         fd, out_path = tempfile.mkstemp(prefix="bench_chunk_", suffix=".json")
         os.close(fd)
@@ -360,13 +338,8 @@ def main() -> None:
                 tail = proc.stderr.decode(errors="replace")[-400:]
                 with open(out_path) as fh:
                     part = json.load(fh)
-                timings.update(
-                    {k: float(v) for k, v in part["timings"].items()}
-                )
-                firsts.update(
-                    {k: float(v) for k, v in part.get("first_sample", {}).items()}
-                )
-                errors.update(part["errors"])
+                for key, acc in parts.items():
+                    acc.update(part[key])
             except subprocess.TimeoutExpired as ex:
                 if ex.stderr:
                     tail = ex.stderr.decode(errors="replace")[-400:]
@@ -409,17 +382,18 @@ def main() -> None:
         "metric": "headline_queries_total_wall_clock",
         "value": total,
         "unit": "sec",
+        # per lane: median of SAMPLES totals; "first_sample" is sample 1,
+        # "samples" every total, "build_s" the median builder-call time
         "queries": timings,
-        # each lane's FIRST-sample wall-clock (cold cost incl. any
-        # session-cache build); "queries" stays the best-of-N steady min
-        "first_sample": firsts,
+        "first_sample": parts["first_sample"],
+        "samples": parts["samples"],
+        "build_s": parts["build_s"],
         "sf": sf,
         "run_id": run_id,
         "git_sha": git_sha,
     }
     if errors:
         out["errors"] = errors
-    out["notes"] = notes
     # Full artifact (per-query map, errors) goes to a sidecar file: the
     # driver captures only the TAIL of stdout, and at 74 headline queries
     # the single-line JSON outgrew that window in round 5 — the captured
@@ -447,7 +421,8 @@ def main() -> None:
     # is one complete JSON object on the last line.
     compact = dict(out)
     compact["queries"] = {k: round(v, 2) for k, v in timings.items()}
-    compact.pop("first_sample", None)  # sidecar-only: stdout is tail-budgeted
+    for key in ("first_sample", "samples", "build_s"):
+        compact.pop(key)  # sidecar-only: stdout is tail-budgeted
     line = json.dumps(compact)
     if len(line) > 1000:
         line = json.dumps(

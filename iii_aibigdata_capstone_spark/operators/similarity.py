@@ -1037,35 +1037,11 @@ def _pq_assign(sub: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
 
-# Session-scoped trained-codebook cache, keyed by (applicationId, sf_dir):
-# training is build-once/search-many in deployment, so repeat searches in
-# one session reuse a checkpointed codebook instead of re-running the
-# 4-iteration Lloyd cascade (VERDICT r5 item 5). OPTED-IN ONLY (r13, the
-# _IVFPQ_INDEX_CACHE rule applied uniformly): lookup AND publish are both
-# gated on use_cache, so the x3_pq_codebooks trainer lane (use_cache=False)
-# keeps its honest training cost without publishing, and the ADC consumer's
-# benched cost is its OWN one-time training in every bench-chunk layout —
-# never a function of which lanes happened to run earlier in the JVM (the
-# r12 verdict's chunk-layout coupling, closed by construction instead of a
-# round_close chunk pin; see BENCH_NOTES.md r13).
-_PQ_CB_CACHE: dict = {}
-
-
-def _pq_det_codebook(
-    spark: SparkSession, sf_dir: str, use_cache: bool = False
-) -> DataFrame:
+def _pq_det_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RAW trained deterministic codebook (m, j, d, c) — see
-    x3_pq_codebooks for the full story. Checkpointed; with ``use_cache``
-    the most recently trained codebook for this (session, sf_dir) is
-    reused (identical lineage, so downstream hashes are unchanged)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if use_cache and key in _PQ_CB_CACHE:
-        return _PQ_CB_CACHE[key]
+    x3_pq_codebooks for the full story. Checkpointed."""
     e = table(spark, sf_dir, "embeddings").where(F.col("vec_id") < PQ_DET_TRAIN)
-    cb = _pq_train_codebook(_pq_quantized_sub(e))
-    if use_cache:
-        _PQ_CB_CACHE[key] = cb
-    return cb
+    return _pq_train_codebook(_pq_quantized_sub(e))
 
 
 def _pq_train_codebook(sub: DataFrame) -> DataFrame:
@@ -1277,13 +1253,11 @@ def x3_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-3 per probe. At 100 TB: the codebook broadcast is KB-sized, the
     encode + ADC pass touches 8 small integers per candidate, and full
     floats are read only for shortlist survivors — the classic IVF-PQ
-    cost shape, now with bit-exact reproducibility. The codebook is
-    trained ONCE by this lane per session and reused on repeat searches
-    (use_cache=True publishes to the opted-in cache; since the r13
-    gating no other lane can pre-pay it, so the lane's benched cost is
-    chunk-layout-independent); a deployment trains once and persists —
-    the ivf_pq_index_save/load story."""
-    cb = _pq_det_codebook(spark, sf_dir, use_cache=True)
+    cost shape, now with bit-exact reproducibility. Every call trains
+    the codebook (the lane's cost is train + encode + search); a
+    deployment trains once and persists — the ivf_pq_index_save/load
+    story."""
+    cb = _pq_det_codebook(spark, sf_dir)
     e_all = table(spark, sf_dir, "embeddings")
     # consumed twice: the corpus encode and the probe slice
     subf = _pq_quantized_sub(e_all).localCheckpoint(eager=False)
@@ -2094,35 +2068,7 @@ def _pq_residual_rows(
     )
 
 
-# Session-scoped built-index cache — the _PQ_CB_CACHE discipline applied
-# to the whole IvfPqIndex (ADVICE r11): building is build-once/serve-many
-# in deployment, so a repeat build for the same (session, sf_dir) reuses
-# the checkpointed index (identical lineage, identical values) instead of
-# re-running codebook training + cell ranking + inverted-list builds.
-# OPTED-IN ONLY (ADVICE r12): both lookup AND publish are gated on
-# use_cache, so a use_cache=False build (the registered x3_ivf_pq_topk
-# lane — its cost stays the honest build+serve) can never replace the
-# entry a use_cache=True consumer reads, and a use_cache=True consumer's
-# benched cost never depends on which OTHER lanes ran earlier in the JVM
-# (the r12 chunk-layout coupling, gone by construction: x3_ivf_pq_eval
-# now pays its own one-time build in every layout). Cross-JOB
-# build-once/serve-many is the parquet store (ivf_pq_index_save/load).
-# SINGLE-SLOT (review r12): unlike the KB-sized codebook cache, a pinned
-# index holds corpus-sized checkpointed RDDs the ContextCleaner can then
-# never unpersist — one (key, index) slot bounds that to one corpus in
-# shared JVMs (bench chunks, scale_probe across sf dirs) instead of one
-# per sf_dir forever.
-_IVFPQ_INDEX_CACHE: dict = {}
-
-
-def _ivfpq_cache_put(key: tuple, index: IvfPqIndex) -> None:
-    _IVFPQ_INDEX_CACHE.clear()
-    _IVFPQ_INDEX_CACHE[key] = index
-
-
-def ivf_pq_index(
-    spark: SparkSession, sf_dir: str, use_cache: bool = False
-) -> IvfPqIndex:
+def ivf_pq_index(spark: SparkSession, sf_dir: str) -> IvfPqIndex:
     """Build the residual IVF-PQ index once per corpus (true FAISS IVFADC
     layout): coarse cell ranking (ivf_ranked_cells), then a PQ codebook
     trained ON THE CELL RESIDUALS — each vector's quantized subvectors
@@ -2135,14 +2081,9 @@ def ivf_pq_index(
     cell geography the IVF assignment already knows. The residual frame
     is checkpointed once (trainer slice + encode pass both read it);
     the rn=1 assignment join is the one corpus-sized equi join of the
-    build."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if use_cache and key in _IVFPQ_INDEX_CACHE:
-        return _IVFPQ_INDEX_CACHE[key]
-    index = ivf_pq_index_from(table(spark, sf_dir, "embeddings"))
-    if use_cache:
-        _ivfpq_cache_put(key, index)
-    return index
+    build. Build-once/serve-many across jobs is the parquet store
+    (ivf_pq_index_save/load)."""
+    return ivf_pq_index_from(table(spark, sf_dir, "embeddings"))
 
 
 def ivf_pq_index_from(e: DataFrame, train_max: int = PQ_DET_TRAIN) -> IvfPqIndex:
@@ -2518,17 +2459,10 @@ def x3_ivf_pq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded broadcasts); the truth pass is one x3_cosine_topk-shaped
     corpus scan with the bounded probe side broadcast (the evaluation's
     own cost); the hit join touches two <= probes x ANN_EVAL_K rank
-    lists. BENCH NOTE (r13): the lane pays its OWN one-time index build
-    (use_cache=True publishes and reuses only within this lane's own
-    key) — since the r13 opt-in cache gating, no other lane's earlier
-    run can pre-pay it, so the benched cost is build+serve+metrics in
-    EVERY chunk layout and tools/decay.py confirms bench readings
-    directly (the r12 chunk-layout coupling, closed by construction; see
-    BENCH_NOTES.md). A deployment serves recall probes against the
+    lists. Every call builds the index, so the lane's cost is
+    build+serve+metrics. A deployment serves recall probes against the
     PERSISTED index instead (ivf_pq_index_load) and pays load+serve."""
-    served = ivf_pq_serve(
-        ivf_pq_index(spark, sf_dir, use_cache=True), _resident_probe_ids(spark)
-    )
+    served = ivf_pq_serve(ivf_pq_index(spark, sf_dir), _resident_probe_ids(spark))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
     )

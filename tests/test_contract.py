@@ -122,6 +122,69 @@ def test_all_queries_have_unique_sorted_columns():
     assert len({s.name for s in ALL_SPECS}) == len(ALL_SPECS)
 
 
+def test_bench_headline_names_registered_lanes_once():
+    import bench
+    from iii_aibigdata_capstone_spark.queries import registry
+
+    specs = registry()
+    assert [n for n in bench.HEADLINE if n not in specs] == []
+    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
+
+
+def _fake_lane(builds, writes):
+    """A fake session (counting ``_jvm.System.gc``) and a fake builder whose
+    call and noop write advance a fake clock by the given seconds."""
+    from types import SimpleNamespace as NS
+
+    clock, calls = [0.0], {"build": 0, "gc": 0, "save": 0}
+    builds, writes = iter(builds), iter(writes)
+
+    def advance(key, seconds):
+        calls[key] += 1
+        clock[0] += next(seconds)
+
+    def gc():
+        calls["gc"] += 1
+
+    writer = NS(save=lambda: advance("save", writes))
+    writer.format = lambda fmt: writer if fmt == "noop" else None
+    writer.mode = lambda mode: writer
+    spark = NS(_jvm=NS(System=NS(gc=gc)))
+
+    def builder(spark_, sf_dir):
+        advance("build", builds)
+        return NS(write=writer)
+
+    return spark, builder, calls, NS(perf_counter=lambda: clock[0])
+
+
+def test_bench_sampler_fixed_count_median_and_build_write_split(monkeypatch):
+    """bench's one lane timer, without Spark: SAMPLES builder calls and GCs,
+    build time split from write time, the median total reported, sample 1
+    kept as first_sample, and a raising lane recorded as an error."""
+    import bench
+
+    assert bench.SAMPLES == 3
+    spark, builder, calls, clock = _fake_lane([4.0, 1.0, 2.0], [10.0, 40.0, 20.0])
+    monkeypatch.setattr(bench, "time", clock)
+    assert bench.sample_lane(spark, builder, "sf") == [(4.0, 10.0), (1.0, 40.0), (2.0, 20.0)]
+    assert calls == {"build": 3, "gc": 3, "save": 3}
+
+    spark, builder, calls, clock = _fake_lane([4.0, 1.0, 2.0], [10.0, 40.0, 20.0])
+    monkeypatch.setattr(bench, "time", clock)
+
+    def broken(spark_, sf_dir):
+        raise ValueError("boom")
+
+    out = bench.time_lanes(spark, {"lane": builder, "broken": broken}, "sf")
+    assert calls == {"build": 3, "gc": 4, "save": 3}  # broken: one gc, then raise
+    assert out["samples"] == {"lane": [14.0, 41.0, 22.0]}
+    assert out["timings"] == {"lane": 22.0}  # the median, not the min or mean
+    assert out["first_sample"] == {"lane": 14.0}
+    assert out["build_s"] == {"lane": 2.0}
+    assert out["errors"] == {"broken": "ValueError: boom"}
+
+
 def test_temp_view_queries_are_idempotent(spark):
     """Queries that register temp views (grouping sets, UDTF) must be
     re-runnable in one session — createOrReplaceTempView, never create."""

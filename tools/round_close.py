@@ -4,7 +4,7 @@ claims and exit non-zero if any artifact disagrees with the live registry.
 
     python tools/round_close.py
 
-Checks 1-5 are read-only (all pure-python, no SparkSession); step 6 WRITES
+Checks 1-2 are read-only (all pure-python, no SparkSession); step 3 WRITES
 one repo file (BENCH_CANONICAL_r{N}.json — the round-stamped snapshot of a
 canonical BENCH_FULL.json, so the driver's post-round in-place overwrite
 cannot shadow the committed run).
@@ -13,12 +13,8 @@ cannot shadow the committed run).
      (N registered queries / M hash-checked oracles).
   2. PARITY.md contains a row for every registered query (and its trailing
      generation stamp matches the registry size).
-  3. bench.py HEADLINE names all resolve in the registry.
-  4. tools/scale_probe.py DEFAULT names all resolve (plus 'flagship').
-  5. Every bench HEADLINE query whose latest benched time exceeds 1 s —
-     or that is too new to have a benched time — also appears in the
-     scale-probe DEFAULT list (sub-second lanes are exempt; the two lists
-     drifted apart on the heavy lanes in r6/r7 — VERDICT r7 item 1).
+  3. (after the checks pass) snapshot BENCH_FULL.json to
+     BENCH_CANONICAL_r{N}.json when it is a fresh canonical run.
 
 Run this before the end-of-round commit; CI-style usage:
     python tools/round_close.py && git commit ...
@@ -26,14 +22,15 @@ Run this before the end-of-round commit; CI-style usage:
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tools"))
 
+import bench  # noqa: E402
 from iii_aibigdata_capstone_spark.queries import registry  # noqa: E402
 
 
@@ -76,50 +73,14 @@ def main() -> int:
             f"registry has {n_queries}/{n_oracles} (run tools/gen_parity.py)"
         )
 
-    # 3/4. bench HEADLINE + probe DEFAULT resolve
-    import bench  # noqa: E402
-
-    bad = [n for n in bench.HEADLINE if n not in specs]
-    if bad:
-        errors.append(f"bench.py HEADLINE names not in registry: {bad}")
-    import scale_probe  # noqa: E402
-
-    bad = [n for n in scale_probe.DEFAULT if n not in specs and n != "flagship"]
-    if bad:
-        errors.append(f"scale_probe.py DEFAULT names not in registry: {bad}")
-
-    # 5. Every HEADLINE query whose latest benched time exceeds 1 s — or that
-    # is new enough to have no benched time yet — must be in probe DEFAULT
-    # (the sync rule: both lists cover every heavy lane).
-    # NOTE: this reads the COMMITTED BENCH_FULL.json, not a live run, so a
-    # query that regresses above 1 s (or lands exactly at 1.0 s) is only
-    # caught on the round-close AFTER the file refreshes — run `python
-    # bench.py` first in the round-close sequence so the threshold reads
-    # current timings (one-round lag otherwise; accepted, documented).
-    import json
-
-    bench_full = os.path.join(REPO, "BENCH_FULL.json")
-    times = {}
-    if os.path.exists(bench_full):
-        times = json.load(open(bench_full)).get("queries", {})
-    drift = [
-        n
-        for n in bench.HEADLINE
-        if n not in scale_probe.DEFAULT and times.get(n, 9.9) > 1.0
-    ]
-    if drift:
-        errors.append(
-            "bench HEADLINE queries over 1 s (or un-benched) absent from "
-            f"scale_probe DEFAULT: {drift}"
-        )
-
     if errors:
         print(f"round_close: {len(errors)} drift(s) detected:")
         for e in errors:
             print(f"  - {e}")
         return 1
 
-    # 6. Round-stamp the canonical bench sidecar (VERDICT r10 ask #6):
+    bench_full = os.path.join(REPO, "BENCH_FULL.json")
+    # 3. Round-stamp the canonical bench sidecar (VERDICT r10 ask #6):
     # the driver re-runs bench.py after the round closes and overwrites
     # BENCH_FULL.json in place, which would shadow the committed canonical
     # run. Snapshotting here pins the run round_close certified; the
@@ -215,7 +176,7 @@ def main() -> int:
 
     print(
         f"round_close: OK — {n_queries} queries / {n_oracles} oracles; "
-        "README, PARITY, HEADLINE, DEFAULT all agree"
+        "README and PARITY agree"
     )
     return 0
 

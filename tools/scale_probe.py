@@ -1,6 +1,8 @@
 #!/usr/bin/env python
-"""Empirical scaling check: run a sample of headline queries at sf0.001,
-sf0.01, and sf0.1 and fit wall-clock ~ SF^alpha per query.
+"""Empirical scaling check: run the bench's headline lanes plus the
+flagship (or the lanes named on the command line) at sf0.001, sf0.01, and
+sf0.1 and fit wall-clock ~ SF^alpha per query. Each timing is the median
+of ``bench.sample_lane``'s fixed SAMPLES runs, after ``bench.warm_up``.
 
 alpha ≈ 0 means fixed overhead still dominates at sf0.1 (fine); alpha ≈ 1
 is linear scaling (the target for scan/agg/join pipelines); alpha >> 1
@@ -29,111 +31,18 @@ from __future__ import annotations
 import json
 import math
 import os
+import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from iii_aibigdata_capstone_spark.queries import registry
-from iii_aibigdata_capstone_spark.session import get_spark
+from bench import HEADLINE, sample_lane, warm_up  # noqa: E402
+from iii_aibigdata_capstone_spark.queries import flagship, registry  # noqa: E402
+from iii_aibigdata_capstone_spark.session import get_spark  # noqa: E402
 
 SFS = [0.001, 0.01, 0.1]
 GATE_ALPHA = 1.3
 GATE_MIN_SEC = 1.0
-# The bench's most expensive queries (BENCH_r01 ranking) plus one probe per
-# scale-sensitive lane — these are where a shape regression would hide.
-DEFAULT = [
-    "q1_pricing_summary",
-    "q5_region_revenue",
-    "q18_big_orders",
-    "q21_sole_late_supplier",
-    "q2_min_cost_supplier",
-    "x9_sessionize",
-    "x2_minhash_lsh",
-    "x2_minhash_banded",
-    "x2_simhash",
-    "x2_embedding_neardup",
-    "x3_cosine_topk",
-    "x4_unigram_logprob",
-    "x9_corpus_curation",
-    "j3_iou_theta_join",
-    "j4_limb_candidates",
-    "w2_nms_greedy",
-    "t4_person_assembly",
-    "dl_pipeline_replay",
-    "x5_interval_join_banded",
-    "x10_triangle_count",
-    "x2_sorted_neighborhood",
-    "x2_repeated_spans",
-    "x4_postings",
-    "x4_bpe_vocab",
-    "x4_bpe_tokenize_apply",
-    "x1_incremental_ingest",
-    "x3_label_centroids",
-    # r3: probe list must cover every benched query whose sf0.1 time is
-    # over GATE_MIN_SEC (VERDICT r2 item 8) — plus "flagship", resolved
-    # specially below
-    "x2_ngram_jaccard",
-    "q3_top_revenue_orders",
-    "q9_product_profit",
-    "flagship",
-    "x2_semantic_dedup",
-    "x4_repetition_ratio",
-    "x1_fuzzy_dedup_pipeline",
-    "x6_audio_energy",
-    "x4_bigram_nll",
-    "x3_hard_negatives",
-    "x3_mmr_rerank",
-    "x9_dsir_resample",
-    "m9_gd_training_loop",
-    # r5 additions (each over GATE_MIN_SEC or iterative/pipeline-shaped)
-    "x2_paragraph_dedup",
-    "m4_lloyd_iterations",
-    "m8_rank_metrics",
-    "x4_pii_scrub",
-    "x3_pq_codebooks",
-    "x3_pq_adc_topk",
-    "x3_signlsh_topk",
-    "x1_minhash_ingest",
-    "x5_hll_explicit",
-    "x5_countmin_terms",
-    "x5_hll_sliding_explicit",
-    "x9_source_quota",
-    "x6_phash_neardup",
-    "x5_hdr_quantiles",
-    "x5_bloom_semijoin",
-    "x2_prefix_filter_join",
-    "x8_table_stats",
-    "x5_bootstrap_ci",
-    "x8_corr_matrix",
-    "x4_bm25_search",
-    "x3_power_iteration",
-    "x6_vad_segments",
-    "x6_scene_cuts",
-    "x10_kcore",
-    "x10_bfs_levels",
-    "x10_hyperball",
-    "x10_random_walks",
-    "x10_adamic_adar",
-    "ts_ewma",
-    "x10_community_lpa",
-    "x10_walk_pairs",
-    "x10_modularity",
-    "x9_rag_pipeline",
-    "x5_spacesaving_topk",
-    "x3_ann_eval",
-    "x9_data_factory",
-    "x2_dedup_eval",
-    "m8_calibration",
-    "x1_ingest_growing",
-    "x9_rag_eval",
-    "x3_ivf_pq_topk",
-    "x3_ivf_pq_add",
-    "x3_truncation_eval",
-    "x4_decontam_eval",
-    "x3_ivf_pq_eval",
-    "x1_ingest_compaction",
-]
 
 
 def main() -> None:
@@ -157,49 +66,23 @@ def main() -> None:
         sf_dirs[1.0] = sf1_dir
         args = [a for a in args if a != "--sf1"]
     top = (sfs[-1], sfs[-2])  # alpha fits the least-fixed-cost decade
-    names = [a for a in args if not a.startswith("--")] or DEFAULT
+    names = [a for a in args if not a.startswith("--")] or HEADLINE + ["flagship"]
     spark = get_spark(app_name="iii-capstone-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     specs = registry()
 
-    def run(builder, sf_dir: str) -> float:
-        # Adaptive best-of-N (the bench.py timed() discipline): rerun
-        # until the two best samples agree within 20% (max 5), report the
-        # min. Fixed best-of-2 let first-run JIT/warmup contaminate the
-        # SMALL end of a decade and inflate alpha — the r9
-        # x2_embedding_neardup 0.692 fit was exactly this artifact
-        # (0.5 -> 2.5s decade, both ends still warming).
-        samples: list[float] = []
-        for _ in range(5):
-            t0 = time.time()
-            builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-            # Sub-3s queries need >= 3 samples before the agreement break
-            # (bench.py timed(): two correlated still-warming samples can
-            # "agree" well above steady state — the r5 x2_simhash lesson).
-            need = 3 if min(samples) < 3.0 else 2
-            if len(samples) >= need:
-                lo, lo2 = sorted(samples)[:2]
-                if lo2 - lo <= max(0.2 * lo, 0.1):
-                    break
-        return min(samples)
+    def median_s(builder, sf_dir: str) -> float:
+        return statistics.median(b + w for b, w in sample_lane(spark, builder, sf_dir))
 
     # warm the JVM + Python worker pool so sf0.001 isn't all startup cost
-    run(specs["q1_pricing_summary"].builder, "/root/testdata/sf0.01")
-    spark.read.parquet("/root/testdata/sf0.01/documents.parquet").select(
-        "doc_id"
-    ).mapInPandas(lambda it: it, "doc_id long").write.format("noop").mode(
-        "overwrite"
-    ).save()
-
-    from iii_aibigdata_capstone_spark.queries import flagship
+    warm_up(spark, "/root/testdata/sf0.01")
 
     records = []
     for name in names:
         builder = flagship if name == "flagship" else specs[name].builder
         times = {}
         for sf in sfs:
-            times[sf] = round(run(builder, sf_dirs[sf]), 3)
+            times[sf] = round(median_s(builder, sf_dirs[sf]), 3)
         alpha = math.log(
             max(times[top[0]], 1e-3) / max(times[top[1]], 1e-3)
         ) / math.log(top[0] / top[1])
