@@ -2,17 +2,18 @@
 the build-once/serve-MANY-JOBS story (r12 verdict ask #1).
 
 The session-scoped index products (``IvfPqIndex`` in similarity.py,
-``IngestIndex`` in dedup.py) live as localCheckpoint'd RDDs plus an
-in-process cache, which makes build-once/serve-many real WITHIN one job
-but leaves a deployment's actual lifecycle — build tonight, serve from
-every job tomorrow — unexpressed. This module is that lifecycle: ONE
+``IngestIndex`` in dedup.py) live as localCheckpoint'd RDDs, which makes
+build-once/serve-many real WITHIN one job but leaves a deployment's
+actual lifecycle — build tonight, serve from every job tomorrow —
+unexpressed. This module is that lifecycle: ONE
 spelling of save (each member DataFrame written to ``<path>/<member>``
 as parquet) and load (each member read back and checkpointed, so N
 serves re-read the checkpoint N times and the store parquet ONCE), used
-by both index families and by the streaming LSM compaction trigger
-(streaming/ingest.py), which collapses a grown index's per-batch delta
-lineage into one persisted segment — exactly what FAISS's
-``write_index``/``read_index`` and an LSM engine's segment flush do.
+by both index families and by the streaming LSM store
+(streaming/ingest.py), whose trigger flushes a grown index's per-batch
+deltas as one persisted delta segment and whose compactor folds them
+back into a snapshot — exactly what FAISS's ``write_index``/
+``read_index`` and an LSM engine's segment flush and compaction do.
 
 Value contract: parquet round-trips every member type here exactly
 (int64/int32, utf8, and IEEE doubles are stored bit-for-bit), and every
@@ -80,7 +81,7 @@ def segment_name_bid(name: str, prefix: str) -> int | None:
 # but a crash BETWEEN member jobs would otherwise leave a directory that
 # looks like an index and loads as a silently partial one. Readers must
 # treat marker-less directories as in-flight garbage
-# (``latest_ingest_segment`` skips them; ``index_load`` refuses them).
+# (``latest_segment`` skips them; ``index_load`` refuses them).
 # All marker/listing/prune operations go through the HADOOP FileSystem
 # resolved from the path's scheme (review r13 #3: driver-local os/open
 # would split the protocol the moment the store is hdfs:// or s3a:// —
@@ -122,8 +123,8 @@ def index_save(
     REPUBLISH DISCIPLINE (review r13): a rebuild writes to a FRESH
     versioned path and retires the old one only after the new marker
     lands — the ``seg_<bid>`` + prune-after-marker pattern the streaming
-    compaction trigger implements; never point a rebuild at the path
-    serving jobs read. The API now ENFORCES that discipline (ADVICE
+    store's ``ingest_store_compact`` implements; never point a rebuild at
+    the path serving jobs read. The API now ENFORCES that discipline (ADVICE
     r13): a path already holding a COMPLETE index is refused unless
     ``overwrite=True``, because the in-place rewrite forfeits the
     previous generation for the duration of the write and a crash

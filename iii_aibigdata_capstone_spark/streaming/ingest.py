@@ -58,7 +58,6 @@ __all__ = [
     "committed_batch_ids",
     "ingest_store_compact",
     "ingest_store_load",
-    "latest_ingest_segment",
     "streaming_minhash_ingest",
     "streaming_minhash_ingest_growing",
 ]
@@ -118,32 +117,6 @@ def streaming_minhash_ingest(
     )
 
 
-def latest_ingest_segment(spark: SparkSession, store: str) -> str | None:
-    """The newest ``seg_<batch_id>`` SNAPSHOT segment directory under a
-    growing stream's index ``store``, or None if no compaction has
-    flushed yet — the restart entry point for full-snapshot stores. THE
-    RECOVERY RECIPE: a resumed driver loads this segment
-    (``ingest_index_load``), selects the admitted sink's batches that
-    the engine COMMITTED at or after the segment boundary
-    (``committed_batch_ids(checkpoint)`` — never a sink batch the engine
-    will replay), resolves those admitted ids to raw docs in the corpus
-    store (the sink records ``doc_id, lang, n_chars``; ``text`` lives in
-    the raw arrival store every deployment of this product keeps — the
-    x9 factory's premise), folds them in (``ingest_fold_admitted`` —
-    the tail is at most the batches since the last flush, never the
-    whole admitted history), and resumes from the source checkpoint.
-    ``seg_<bid>`` covers exactly the batches BEFORE ``bid`` (the flush
-    runs pre-fold at the start of batch ``bid``, when the engine has
-    committed precisely batches < bid — review r13: a post-fold flush
-    could cover a batch the engine never committed, and its replay
-    would self-reject every doc and emit the batch as empty). Only
-    segments whose completeness marker landed count; a directory
-    interrupted between member writes is skipped, never trusted. A
-    DELTA-segment store (``segment_mode="delta"``) composes instead:
-    use ``ingest_store_load``, which handles both layouts."""
-    return latest_segment(spark, store, "seg_")
-
-
 def _segment_bid(name: str, prefix: str) -> int:
     """Batch id of a KNOWN-well-formed segment name/path (one that came
     through ``complete_segments``) — delegates to ``segment_name_bid``,
@@ -161,11 +134,11 @@ def ingest_store_load(
     """Compose the current index from a growing stream's ``store`` —
     ``(index, boundary_bid)`` where the index covers exactly the batches
     BEFORE ``boundary_bid``, or None if nothing complete has landed.
-    Handles BOTH store layouts with one spelling: the newest complete
-    ``seg_<bid>`` snapshot (covers everything before its bid) unioned
-    with every complete ``delta_<bid>`` whose bid is NEWER (each covers
-    the batches between the previous flush and its own bid — the
-    delta-only flush shape, O(delta) rows per segment). None means an
+    The composition is the newest complete ``seg_<bid>`` snapshot (the
+    trigger's resident base, or an ``ingest_store_compact`` output;
+    covers everything before its bid) unioned with every complete
+    ``delta_<bid>`` whose bid is NEWER (each covers the batches between
+    the previous flush and its own bid, O(delta) rows). None means an
     EMPTY store (nothing complete ever landed — rebuild from residents
     + the admitted sink); a store holding complete deltas but NO base
     snapshot raises instead of returning None, because that state is
@@ -174,14 +147,13 @@ def ingest_store_load(
     partially copied) and a silent rebuild would paper over it. The composition
     is metadata-only (``ingest_union``); each segment's members come
     back lazily checkpointed, so a restart reads each segment's parquet
-    once however many batches it then serves. RECOVERY RECIPE (both
-    layouts): ``index, b = ingest_store_load(...)``; fold the admitted
-    sink's docs for engine-committed batches ``>= b``
-    (``committed_batch_ids``), resume from the source checkpoint —
-    passing the tail via the growing trigger's ``tail_docs`` in delta
-    mode so the NEXT delta flush persists it (the tail lives only in
-    the driver until then; a full-mode flush re-snapshots everything so
-    it needs no such care).
+    once however many batches it then serves. RECOVERY RECIPE:
+    ``index, b = ingest_store_load(...)``; resolve the admitted sink's
+    docs for engine-committed batches ``>= b`` (``committed_batch_ids``)
+    and pass them as the growing trigger's ``tail_docs``, resuming from
+    the source checkpoint — the trigger folds the tail and the NEXT
+    delta flush persists it (the tail lives only in the driver until
+    then).
 
     ``scan=True`` loads every member as a PLAIN parquet scan instead of
     a lazy checkpoint — the READ-ONCE shape (review r14): the compactor
@@ -192,17 +164,9 @@ def ingest_store_load(
     the default."""
     segs = complete_segments(spark, store, "seg_")
     deltas = complete_segments(spark, store, "delta_")
-    if not segs and not deltas:
-        return None
-    members = IngestIndex._fields if scan else ()
-    if segs:
-        base_name = segs[-1]
-        boundary = _segment_bid(base_name, "seg_")
-        index = ingest_index_load(
-            spark, os.path.join(store, base_name), scan_members=members
-        )
-        tail = [d for d in deltas if _segment_bid(d, "delta_") > boundary]
-    else:
+    if not segs:
+        if not deltas:
+            return None
         # deltas without any base snapshot: the trigger writes the base
         # BEFORE any delta can flush, so this store lost its base
         # (deleted, partial copy) — refuse loudly rather than compose a
@@ -212,6 +176,12 @@ def ingest_store_load(
             "snapshot (seg_*) — the base was lost after flushes ran; "
             "rebuild from residents + the admitted sink and republish"
         )
+    members = IngestIndex._fields if scan else ()
+    boundary = _segment_bid(segs[-1], "seg_")
+    index = ingest_index_load(
+        spark, os.path.join(store, segs[-1]), scan_members=members
+    )
+    tail = [d for d in deltas if _segment_bid(d, "delta_") > boundary]
     for name in tail:
         index = ingest_union(
             index,
@@ -226,8 +196,8 @@ def ingest_store_load(
 def ingest_store_compact(
     spark: SparkSession, store: str, keep_segments: int = 2
 ) -> str:
-    """OUT-OF-BAND compaction of a delta-segment store (the second half
-    of the O(delta) flush design, r13 verdict ask #2): fold the newest
+    """OUT-OF-BAND compaction of the growing-ingest store (the second
+    half of the O(delta) flush design, r13 verdict ask #2): fold the newest
     base snapshot + every newer delta segment into ONE new
     ``seg_<boundary>`` snapshot, marker written last, then prune — a
     batch maintenance job a deployment schedules nightly, completely
@@ -236,15 +206,18 @@ def ingest_store_compact(
     complete (a previous compactor run crashed after the marker), the
     write is skipped and only pruning proceeds.
 
-    RETENTION GRACE (r13 verdict ask #1): pruning keeps the newest
+    RETENTION GRACE (r13 verdict ask #1) — the store's only pruning:
+    the ingest trigger never deletes a segment. Pruning keeps the newest
     ``keep_segments`` snapshots, and keeps every delta newer than the
     OLDEST kept snapshot — so any concurrent reader that composed ANY
     kept generation (snapshot + its deltas, lazy checkpoints still
     unmaterialized) keeps all its input parquet for at least one more
-    compaction cycle. Only segments a reader of a retired generation
-    would need are deleted — the documented trade: retire-delay is one
-    compaction period, so schedule compaction no more often than the
-    longest-running reader job."""
+    compaction cycle (pinned by tests/test_streaming.py::
+    test_concurrent_reader_survives_flush). Only segments a reader of a
+    retired generation would need are deleted — the documented trade:
+    retire-delay is one compaction period, so schedule compaction no
+    more often than the longest-running reader job; ``keep_segments=1``
+    retires immediately, for single-job stores."""
     if keep_segments < 1:
         raise ValueError(f"keep_segments must be >= 1, got {keep_segments}")
     # scan=True: the composition is written exactly once — plain scans
@@ -279,7 +252,7 @@ def _growing_state(
     index: IngestIndex, tail_docs: DataFrame | None
 ) -> dict:
     """The growing trigger's driver-held state, with THE invariant the
-    delta mode rests on: ``cur == base UNION pending`` (pending None =>
+    delta flush rests on: ``cur == base UNION pending`` (pending None =>
     cur IS base). The recovered tail becomes PENDING — folded into
     ``cur`` for admissions but NOT into ``base``, because the first
     delta flush persists pending and unions the LOADED segment into
@@ -292,9 +265,11 @@ def _growing_state(
     pending0 = None
     cur = index
     if tail_docs is not None:
-        # the retained-delta form of ingest_fold_admitted: same fold
-        # invariant (pure per-doc members), but the delta stays PENDING
-        # so the next delta flush persists the recovered tail
+        # admitted docs are exact-gate survivors and every member is a
+        # pure per-doc function, so building their members from scratch
+        # reproduces what the original per-batch folds appended (same-
+        # text docs admitted within ONE batch collapse to one hash row
+        # in both); the delta stays PENDING so the next flush persists it
         pending0 = minhash_ingest_index(tail_docs)
         cur = ingest_union(index, pending0)
     return {"cur": cur, "base": index, "pending": pending0}
@@ -307,8 +282,6 @@ def streaming_minhash_ingest_growing(
     checkpoint: str,
     compact_every: int | None = None,
     store: str | None = None,
-    keep_segments: int = 2,
-    segment_mode: str = "full",
     tail_docs: DataFrame | None = None,
 ):
     """The GROWING admission stream (r10 verdict ask #2): after each
@@ -334,72 +307,43 @@ def streaming_minhash_ingest_growing(
     that persists segments to the index store skips even that rebuild —
     that is ``compact_every``:
 
-    PERIODIC IN-STREAM COMPACTION (r12 verdict ask #6, the LSM story's
-    last piece): with ``compact_every=N`` and a ``store`` directory, the
-    start of every Nth micro-batch ``bid`` flushes the PRE-FOLD index —
-    exactly the batches the engine has committed, which at that moment
-    is precisely batches < bid — to ``<store>/seg_<bid>``
-    (``ingest_index_save``: each member's base + accumulated deltas
-    written as ONE parquet segment, completeness marker last) and the
-    driver continues on the LOADED segment (``ingest_index_load``);
-    superseded segments are pruned after the new marker lands. Values
+    PERIODIC IN-STREAM FLUSH (r12 verdict ask #6, r13 ask #2): with
+    ``compact_every=N`` and a ``store`` directory, the resident index is
+    snapshotted ONCE as ``seg_000000000`` when the store is empty, and
+    the start of every Nth micro-batch ``bid`` writes ONLY the deltas
+    folded since the previous flush to ``<store>/delta_<bid>``
+    (``ingest_index_save``, completeness marker last) — O(admitted since
+    the last flush) member rows, never O(corpus). The flush runs
+    PRE-FOLD, when the engine has committed exactly batches < bid, so a
+    segment never contains an uncommitted batch (review r13: its replay
+    would self-reject every doc and emit the batch as empty). The driver
+    continues on base UNION the LOADED delta, collapsing the per-batch
+    delta checkpoints into one parquet read: plan depth stays bounded
+    by ``compact_every`` deltas plus one union per elapsed flush. Values
     are untouched — save/load round-trips every member exactly, so the
-    post-compaction index still satisfies the fold invariant
-    (row-identical to ``minhash_ingest_index(residents UNION
-    admitted-so-far)``, pinned member-by-member by
+    composed store equals ``minhash_ingest_index(residents UNION
+    admitted-so-far)`` (pinned member-by-member by
     tests/test_streaming.py) and downstream admissions cannot drift.
-    What changes is the physical shape, which is the point at 100 TB:
-    the member lineage (and the per-batch probe's localCheckpoint
-    chain) is collapsed from one delta per elapsed batch back to one
-    segment, bounding driver-held plan depth to ``compact_every``
-    deltas forever, and RESTART becomes load-latest-segment + fold the
-    admitted sink's post-flush tail (``latest_ingest_segment`` +
-    ``ingest_fold_admitted``) + resume — correct at EVERY crash point
-    because a segment never contains an uncommitted batch, and strictly
-    cheaper than the full rebuild the no-store path needs. COST KNOB,
-    stated honestly: each flush is a full snapshot — it rewrites
-    base+deltas (~O(corpus) member rows), which is what an LSM
-    compaction does by definition; ``compact_every`` amortizes that
-    rewrite against per-batch delta accumulation and bounded-tail
-    recovery (a deployment that wants flush cost O(delta) writes
-    delta-only segments and compacts them out-of-band instead). This is
-    the segment half of compaction — physical, admission-preserving;
-    the SEMANTIC keep-best reconciliation over what the ingest retained
-    is the batch ``x1_ingest_compaction`` lane, runnable over these
-    same stored segments.
+    Segment count grows by one per flush until the out-of-band
+    ``ingest_store_compact`` folds base+deltas back into one snapshot
+    and prunes (the store's only retention, including the grace a
+    concurrent reader needs) — the classic LSM split: cheap sequential
+    flushes on the hot path, compaction amortized off it. A flush that
+    finds a snapshot newer than the one it composed on rebases onto the
+    store, so the driver never stays pinned to segments the compactor
+    prunes. This is the segment half of compaction — physical,
+    admission-preserving; the SEMANTIC keep-best reconciliation over
+    what the ingest retained is the batch ``x1_ingest_compaction``
+    lane.
 
-    RETENTION GRACE (r13 verdict ask #1): a flush no longer deletes the
-    superseded segment the moment the new marker lands — it keeps the
-    newest ``keep_segments`` complete snapshots (default 2: current +
-    one previous generation). The store's whole point is OTHER jobs
-    reading it, and a serving job mid-scan on ``seg_N`` (lazy
-    checkpoints unmaterialized) must survive the ingest flushing
-    ``seg_N+k`` — with the grace window, its input parquet lives for at
-    least one more full flush cycle (pinned by
-    tests/test_streaming.py::test_concurrent_reader_survives_flush).
-    ``keep_segments=1`` restores retire-immediately for single-job
-    stores. External readers slower than one flush cycle must eagerly
-    materialize or raise the knob.
-
-    DELTA-ONLY SEGMENTS (``segment_mode="delta"``, r13 verdict ask #2 —
-    the O(delta) flush the full-snapshot COST KNOB paragraph names): the
-    initial resident index is snapshotted ONCE as ``seg_000000000`` when
-    the store is empty, and every flush then writes ONLY the deltas
-    accumulated since the previous flush to ``delta_<bid>`` — O(admitted
-    since last flush) member rows, never O(corpus) — while the
-    driver-held index collapses those per-batch delta checkpoints into
-    the one loaded segment (plan depth stays bounded by
-    ``compact_every`` deltas plus one parquet union per elapsed flush).
-    Recovery composes the base snapshot + newer deltas
-    (``ingest_store_load``) and hands the committed sink tail to
-    ``tail_docs`` — the trigger folds it as PENDING so the next delta
-    flush persists it (folding it into the base would orphan it from
-    every future segment: the one recovery-contract difference from
-    full mode, where each flush re-snapshots everything). Segment count
-    grows by one per flush until the out-of-band
-    ``ingest_store_compact`` folds base+deltas back into one snapshot —
-    the classic LSM split: cheap sequential flushes on the hot path,
-    compaction amortized off it."""
+    RESTART from the store: ``index, b = ingest_store_load(...)``, the
+    admitted sink's docs for engine-committed batches ``>= b``
+    (``committed_batch_ids``) as ``tail_docs`` (``doc_id, lang, text,
+    n_chars`` — the sink carries the ids, ``text`` is resolved by id
+    from the raw arrival store), and the source checkpoint — correct at EVERY crash point because a segment never
+    contains an uncommitted batch, and strictly cheaper than the full
+    rebuild the no-store path needs. The trigger folds the tail as
+    PENDING so the next flush persists it (``_growing_state``)."""
     if (compact_every is None) != (store is None):
         raise ValueError(
             "compact_every and store come together: a store without a "
@@ -408,28 +352,10 @@ def streaming_minhash_ingest_growing(
         )
     if compact_every is not None and compact_every < 1:
         raise ValueError(f"compact_every must be >= 1, got {compact_every}")
-    if segment_mode not in ("full", "delta"):
-        raise ValueError(f"segment_mode must be 'full' or 'delta', got {segment_mode!r}")
-    if segment_mode == "delta" and store is None:
+    if tail_docs is not None and store is None:
         raise ValueError(
-            "segment_mode='delta' describes the STORE's flush shape; "
-            "it needs compact_every and store"
-        )
-    if segment_mode == "delta" and keep_segments != 2:
-        raise ValueError(
-            "keep_segments is the FULL-mode flush-pruning knob; delta "
-            "segments compose and are retired only by "
-            "ingest_store_compact(..., keep_segments=...) — configure "
-            "retention there (review r14: accepting the knob here and "
-            "silently never pruning misleads the operator)"
-        )
-    if keep_segments < 1:
-        raise ValueError(f"keep_segments must be >= 1, got {keep_segments}")
-    if tail_docs is not None and (segment_mode != "delta" or store is None):
-        raise ValueError(
-            "tail_docs is the delta-mode recovery handoff (the tail must "
-            "reach the NEXT delta flush); full-mode recovery folds the "
-            "tail into the index before calling (ingest_fold_admitted)"
+            "tail_docs is the store-recovery handoff (the tail must reach "
+            "the NEXT flush); it needs compact_every and store"
         )
     if compact_every is not None:
         # the recovery tail is < compact_every engine-committed batches,
@@ -450,7 +376,8 @@ def streaming_minhash_ingest_growing(
                 "silently lose admitted batches — lower compact_every "
                 "or raise the retention"
             )
-    if segment_mode == "delta" and store is not None:
+    st = _growing_state(index, tail_docs)
+    if store is not None:
         # one-time base snapshot so recovery always has a floor to
         # compose deltas onto — only on a FRESH store (a restart finds
         # segments and must not re-snapshot its recovered composition,
@@ -460,15 +387,13 @@ def streaming_minhash_ingest_growing(
             complete_segments(spark0, store, "delta_")
         ):
             ingest_index_save(index, os.path.join(store, f"seg_{0:09d}"))
-    st = _growing_state(index, tail_docs)
-    if segment_mode == "delta":
         # the snapshot generation the driver-held composition rests on —
         # a flush compares against the CURRENT newest snapshot to detect
         # an out-of-band compaction (full rebase) vs plain delta growth
         # (incremental union); at start the passed index is by contract
         # either the fresh residents (just snapshotted) or the recovery
         # composition off the then-newest snapshot
-        st["snap"] = latest_segment(index[0].sparkSession, store)
+        st["snap"] = latest_segment(spark0, store)
 
     def _flush(spk: SparkSession, bid: int) -> None:
         # flush BEFORE folding this batch: the engine has committed
@@ -477,75 +402,46 @@ def streaming_minhash_ingest_growing(
         # replays only batches the segment does NOT cover, and their
         # docs admit normally instead of self-rejecting (review
         # r13). Replay of the flush batch `bid` itself: if its segment
-        # is already COMPLETE, skip the save — the recovered state is
-        # value-identical by the fold invariant, and saving would
-        # overwrite the very parquet the recovered index's lazy
-        # checkpoints still read from (review r13 #2: self-overwrite
-        # destroys the only complete segment). A marker-LESS segment
-        # (crash mid-save) is re-saved safely: nothing loadable reads
-        # from it, and what it would supersede is still present
-        # (pruning runs only after a marker lands).
-        if segment_mode == "delta":
-            seg = os.path.join(store, f"delta_{bid:09d}")
-            replay = index_is_complete(spk, seg)
-            if not replay:
-                if st["pending"] is None:
-                    # nothing folded since the last flush (reachable
-                    # only when the first post-restart batch IS a flush
-                    # boundary) — an EMPTY delta still lands so the
-                    # covered boundary advances and the recovery tail
-                    # stays bounded by compact_every
-                    ingest_index_save(
-                        IngestIndex(*(m.limit(0) for m in st["base"])), seg
-                    )
-                else:
-                    ingest_index_save(st["pending"], seg)
-            # collapse + compaction pickup, on EVERY path (review r14
-            # passes 2-4): if an out-of-band ingest_store_compact landed
-            # a NEWER snapshot since the last flush, REBASE the whole
-            # composition from the store (one full re-read, collapses
-            # the live plan; skipping this on the empty/replay paths
-            # would leave the driver pinned to segments the compactor's
-            # NEXT cycle prunes). Otherwise union just the written
-            # delta (keeping every already-materialized segment
-            # checkpoint — a full rebase per flush would re-read
-            # O(corpus) parquet each cycle in a design sold on O(delta)
-            # flushes); on replay the recovered base composed the
-            # segment already, and an empty delta adds nothing — both
-            # no-ops. No pruning here — delta segments COMPOSE (only
-            # ingest_store_compact retires them; the trigger's
-            # keep_segments knob is full-mode-only, rejected in
-            # validation for delta mode).
-            snap = latest_segment(spk, store)
-            if snap != st["snap"]:
-                st["snap"] = snap
-                st["base"] = ingest_store_load(spk, store)[0]
-            elif st["pending"] is not None and not replay:
-                st["base"] = ingest_union(
-                    st["base"], ingest_index_load(spk, seg)
+        # is already COMPLETE, skip the save — the recovered state
+        # composed it already, and saving would overwrite the very
+        # parquet the recovered index's lazy checkpoints still read
+        # from (review r13 #2). A marker-LESS segment (crash mid-save)
+        # is re-saved safely: nothing loadable reads from it.
+        seg = os.path.join(store, f"delta_{bid:09d}")
+        replay = index_is_complete(spk, seg)
+        if not replay:
+            if st["pending"] is None:
+                # nothing folded since the last flush (reachable only
+                # when the first post-restart batch IS a flush boundary)
+                # — an EMPTY delta still lands so the covered boundary
+                # advances and the recovery tail stays bounded by
+                # compact_every
+                ingest_index_save(
+                    IngestIndex(*(m.limit(0) for m in st["base"])), seg
                 )
-            st["pending"] = None
-            st["cur"] = st["base"]
-            return
-        seg = os.path.join(store, f"seg_{bid:09d}")
-        if not index_is_complete(spk, seg):
-            ingest_index_save(st["cur"], seg)
-        st["cur"] = st["base"] = ingest_index_load(spk, seg)
+            else:
+                ingest_index_save(st["pending"], seg)
+        # collapse + compaction pickup, on EVERY path (review r14 passes
+        # 2-4): if an out-of-band ingest_store_compact landed a NEWER
+        # snapshot since the last flush, REBASE the whole composition
+        # from the store (one full re-read, collapses the live plan;
+        # skipping this on the empty/replay paths would leave the driver
+        # pinned to segments the compactor's NEXT cycle prunes).
+        # Otherwise union just the written delta (keeping every
+        # already-materialized segment checkpoint — a full rebase per
+        # flush would re-read O(corpus) parquet each cycle in a design
+        # sold on O(delta) flushes); on replay the recovered base
+        # composed the segment already, and an empty delta adds nothing
+        # — both no-ops. No pruning here: only ingest_store_compact
+        # retires segments.
+        snap = latest_segment(spk, store)
+        if snap != st["snap"]:
+            st["snap"] = snap
+            st["base"] = ingest_store_load(spk, store)[0]
+        elif st["pending"] is not None and not replay:
+            st["base"] = ingest_union(st["base"], ingest_index_load(spk, seg))
         st["pending"] = None
-        # RETENTION GRACE: keep the newest keep_segments complete
-        # snapshots (a concurrent reader of the previous generation
-        # keeps its parquet for one more flush cycle); everything else
-        # seg_-prefixed — retired generations AND marker-less partials
-        # older than the survivors — goes
-        keep = set(complete_segments(spk, store, "seg_")[-keep_segments:])
-        fs, spath = hadoop_fs(spk, store)
-        for fst in fs.listStatus(spath):
-            name = fst.getPath().getName()
-            # well-formed names only (segment_name_bid, the one naming
-            # spelling): retired generations and marker-less partials
-            # go; a stray non-numeric entry is not ours to delete
-            if segment_name_bid(name, "seg_") is not None and name not in keep:
-                fs.delete(fst.getPath(), True)
+        st["cur"] = st["base"]
 
     def _admit_and_fold(df: DataFrame, bid: int) -> None:
         if compact_every and bid > 0 and bid % compact_every == 0:
@@ -556,7 +452,7 @@ def streaming_minhash_ingest_growing(
         # cleaned/archived files or Kafka past retention; review r11)
         admitted, delta = ingest_admit_fold_delta(st["cur"], df, eager=True)
         st["cur"] = ingest_union(st["cur"], delta)
-        if segment_mode == "delta":
+        if store is not None:
             st["pending"] = (
                 delta
                 if st["pending"] is None

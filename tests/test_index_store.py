@@ -2,7 +2,7 @@
 parquet store — save, load, and serve-from-loaded pins, INCLUDING the
 fresh-JVM pin that makes build-once/serve-many real across JOBS (a
 nightly build's index served by tomorrow's process, which session-scoped
-checkpoints and the in-process cache cannot express)."""
+checkpoints cannot express)."""
 
 from __future__ import annotations
 
@@ -364,16 +364,14 @@ def test_fresh_jvm_serves_persisted_indexes_identically(spark):
 def test_incomplete_segment_refused_by_load_and_skipped_by_latest(spark, tmp_path):
     """The completeness protocol (review r13): a segment directory whose
     marker never landed (crash between member writes) must be refused by
-    ``index_load`` with a clear error and skipped by
-    ``latest_ingest_segment`` — never trusted, never silently partial."""
+    ``index_load`` with a clear error and skipped by ``latest_segment``
+    — never trusted, never silently partial."""
     import pytest
 
     from iii_aibigdata_capstone_spark.operators.dedup import ingest_index_load
     from iii_aibigdata_capstone_spark.operators.index_store import (
         INDEX_COMPLETE_MARKER,
-    )
-    from iii_aibigdata_capstone_spark.streaming.ingest import (
-        latest_ingest_segment,
+        latest_segment,
     )
 
     store = tmp_path / "store"
@@ -384,7 +382,7 @@ def test_incomplete_segment_refused_by_load_and_skipped_by_latest(spark, tmp_pat
     partial.mkdir()
     (partial / "hashes").mkdir()  # some members landed, marker did not
 
-    assert latest_ingest_segment(spark, str(store)) == str(complete)
+    assert latest_segment(spark, str(store)) == str(complete)
     with pytest.raises(ValueError, match="not a complete index segment"):
         ingest_index_load(spark, str(partial))
 
@@ -437,27 +435,14 @@ def test_compaction_trigger_validation(spark, tmp_path):
         {"store": str(tmp_path / "s")},
         {"compact_every": 2},
         {"compact_every": 0, "store": str(tmp_path / "s")},
-        {"compact_every": 2, "store": str(tmp_path / "s"), "keep_segments": 0},
-        {"compact_every": 2, "store": str(tmp_path / "s"), "segment_mode": "lsm"},
-        {"segment_mode": "delta"},  # delta mode needs a store to flush to
-        # keep_segments is full-mode-only; delta retention lives on
-        # ingest_store_compact (accepting it here and never pruning
-        # would mislead the operator)
-        {
-            "compact_every": 2,
-            "store": str(tmp_path / "s"),
-            "segment_mode": "delta",
-            "keep_segments": 3,
-        },
     ):
         with pytest.raises(ValueError):
             streaming_minhash_ingest_growing(
                 None, None, emit=lambda df, bid: None,
                 checkpoint=str(tmp_path / "ck"), **kwargs
             )
-    # tail_docs is the DELTA-mode recovery handoff only: in full mode the
-    # flush re-snapshots everything, so the caller folds the tail before
-    # calling (ingest_fold_admitted) and passing it here is a misuse
+    # tail_docs is the store-recovery handoff: without a store no flush
+    # would ever persist the tail
     with pytest.raises(ValueError, match="tail_docs"):
         streaming_minhash_ingest_growing(
             None, None, emit=lambda df, bid: None,

@@ -1002,36 +1002,53 @@ def test_streaming_growing_ingest_restart_recovery(spark, growing_split):
 
 
 def test_streaming_compaction_trigger_preserves_fold_invariant(spark, growing_split, tmp_path):
-    """PERIODIC IN-STREAM COMPACTION (r12 verdict ask #6): the growing
-    stream with ``compact_every=1`` flushes the PRE-FOLD index at the
-    start of batches 2 and 3 (segments cover exactly the committed
-    prefix) and continues on the LOADED segment, pruning the superseded
-    one. Three pins: (1) admissions are byte-identical to the
-    uncompacted batch fold (compaction is physical, never semantic);
-    (2) pruning keeps exactly the newest ``keep_segments=2`` snapshot
-    generations — seg_2 (current, covering batches 1-2) AND seg_1 (the
-    grace generation a concurrent reader may still hold, r13 verdict
-    ask #1) — and ``latest_ingest_segment`` picks seg_2; (3) THE FOLD
-    INVARIANT holds on the store artifact: every member of the loaded
-    segment is row-identical to ``minhash_ingest_index(residents UNION
-    admitted-in-batches-1-2)`` built from scratch — the rebuildability
-    contract the restart story rests on."""
+    """PERIODIC IN-STREAM FLUSH with an OUT-OF-BAND COMPACTION mid-stream
+    (r12 verdict ask #6): with ``compact_every=1`` the stream flushes
+    the pre-fold deltas at the start of batches 2 and 3, and the emit of
+    batch 2 runs ``ingest_store_compact(keep_segments=1)``, which folds
+    the base + delta_1 into seg_1 and retires both. The next flush must
+    REBASE the driver onto seg_1: the stream starts on the base snapshot
+    loaded as plain parquet scans, so a driver still composed on the
+    retired generation re-reads deleted parquet and the stream fails.
+    Three pins: (1) admissions are identical to the uncompacted batch
+    fold (flushes and compaction are physical, never semantic); (2) the
+    store holds exactly the compacted seg_1 and the post-compaction
+    delta_2; (3) THE FOLD INVARIANT holds on the store artifact: every
+    member of ``ingest_store_load`` is row-identical to
+    ``minhash_ingest_index(residents UNION admitted-in-batches-1-2)``
+    built from scratch — the rebuildability contract the restart story
+    rests on."""
     from iii_aibigdata_capstone_spark.operators.dedup import (
+        IngestIndex,
+        ingest_index_load,
+        ingest_index_save,
         minhash_ingest_index,
     )
     from iii_aibigdata_capstone_spark.queries import registry
     from iii_aibigdata_capstone_spark.streaming.ingest import (
-        latest_ingest_segment,
+        ingest_store_compact,
+        ingest_store_load,
         streaming_minhash_ingest_growing,
     )
 
     docs, src = growing_split
     store = str(tmp_path / "store")
+    base = os.path.join(store, "seg_000000000")
+    ingest_index_save(minhash_ingest_index(docs.where(F.col("doc_id") % 4 == 0)), base)
     per_batch: dict[int, list] = {}
+
+    def _emit(df, bid):
+        per_batch.setdefault(bid, []).extend(df.collect())
+        if bid == 1:  # delta_1 flushed at the start of this batch
+            ingest_store_compact(spark, store, keep_segments=1)
+
     q = streaming_minhash_ingest_growing(
-        minhash_ingest_index(docs.where(F.col("doc_id") % 4 == 0)),
+        # plain scans, not checkpoints: every admission re-reads the
+        # snapshot, so serving from a retired generation cannot hide
+        # behind materialized checkpoint blocks
+        ingest_index_load(spark, base, scan_members=IngestIndex._fields),
         _arrival_stream(spark, src),
-        emit=lambda df, bid: per_batch.setdefault(bid, []).extend(df.collect()),
+        emit=_emit,
         checkpoint=str(tmp_path / "ck"),
         compact_every=1,
         store=store,
@@ -1039,7 +1056,7 @@ def test_streaming_compaction_trigger_preserves_fold_invariant(spark, growing_sp
     assert q.awaitTermination(300), "stream did not finish"
     q.stop()
 
-    # pin 1: compaction never changes admissions
+    # pin 1: flushes and compaction never change admissions
     got = sorted(
         (pos + 1, r.doc_id, r.lang, r.n_chars)
         for pos, bid in enumerate(sorted(per_batch))
@@ -1051,53 +1068,46 @@ def test_streaming_compaction_trigger_preserves_fold_invariant(spark, growing_sp
     )
     assert got and got == want
 
-    # pin 2: flushes at the start of bids 1 and 2 (pre-fold, bid>0);
-    # retention keeps the newest TWO generations (seg_1 is the
-    # concurrent-reader grace window), latest picks seg_2
-    seg = latest_ingest_segment(spark, store)
-    assert seg is not None and seg.endswith("seg_000000002")
-    assert sorted(os.listdir(store)) == ["seg_000000001", "seg_000000002"]
+    # pin 2: the compaction retired seg_0 and delta_1; the bid-2 flush
+    # wrote delta_2 on top of the compacted snapshot
+    assert sorted(os.listdir(store)) == ["delta_000000002", "seg_000000001"]
 
-    # pin 3: the segment == a from-scratch rebuild over residents +
+    # pin 3: the store == a from-scratch rebuild over residents +
     # batches 1-2 admissions, member by member
-    from iii_aibigdata_capstone_spark.operators.dedup import ingest_index_load
-
+    composed, boundary = ingest_store_load(spark, store)
+    assert boundary == 2
     adm12 = [r.doc_id for bid in sorted(per_batch)[:2] for r in per_batch[bid]]
     rebuilt = minhash_ingest_index(
         docs.where((F.col("doc_id") % 4 == 0) | F.col("doc_id").isin(adm12))
     )
-    loaded = ingest_index_load(spark, seg)
-    for member, have, wanted in zip(loaded._fields, loaded, rebuilt):
+    for member, have, wanted in zip(composed._fields, composed, rebuilt):
         got_rows = sorted(map(tuple, have.collect()))
         want_rows = sorted(map(tuple, wanted.collect()))
-        assert got_rows == want_rows, f"segment member {member} diverged"
+        assert got_rows == want_rows, f"stored member {member} diverged"
 
 
 def test_streaming_compaction_restart_resumes_from_segment(spark, growing_split, tmp_path):
-    """RESTART AFTER A FLUSH resumes from the stored segment plus the
-    admitted sink's short tail, not a full rebuild: drain batches 1-2
-    with ``compact_every=1`` (seg_1 flushed at the start of batch 2,
-    covering batch 1 only), simulate driver death, then restart with
-    ``ingest_fold_admitted(ingest_index_load(latest_ingest_segment(spark, store)),
-    <batch-2 admissions from the sink>)`` and the same source checkpoint
-    — only batch 3 replays, and the union of emissions across both
-    incarnations equals the uninterrupted batch fold. This is the
-    deployment recovery recipe the growing twin's docstring promises
-    (segment + bounded tail fold), strictly cheaper than the
-    rebuild-over-the-whole-admitted-history path the no-store restart
-    test pins."""
+    """RESTART AFTER A FLUSH AND A COMPACTION resumes from the stored
+    snapshot plus the admitted sink's short tail, not a full rebuild:
+    drain batches 1-2 with ``compact_every=1`` (base seg_0 + delta_1,
+    flushed at the start of batch 2 and covering batch 1 only), compact
+    the store into seg_1 while the driver is down, then restart with the
+    recovery recipe — ``ingest_store_load`` (seg_1, boundary 1), the
+    ENGINE-COMMITTED sink batches at or after the boundary
+    (``committed_batch_ids``) as ``tail_docs``, and the same source
+    checkpoint. Only batch 3 replays, the union of emissions across both
+    incarnations equals the uninterrupted batch fold, and the restarted
+    trigger does not re-snapshot its recovered composition: the store
+    holds seg_1 plus the post-restart delta_2 only."""
     import glob
     import shutil
 
-    from iii_aibigdata_capstone_spark.operators.dedup import (
-        ingest_fold_admitted,
-        ingest_index_load,
-        minhash_ingest_index,
-    )
+    from iii_aibigdata_capstone_spark.operators.dedup import minhash_ingest_index
     from iii_aibigdata_capstone_spark.queries import registry
     from iii_aibigdata_capstone_spark.streaming.ingest import (
         committed_batch_ids,
-        latest_ingest_segment,
+        ingest_store_compact,
+        ingest_store_load,
         streaming_minhash_ingest_growing,
     )
 
@@ -1127,26 +1137,24 @@ def test_streaming_compaction_restart_resumes_from_segment(spark, growing_split,
         for pos, bid in enumerate(sorted(per_batch))
         for r in per_batch[bid]
     ]
-    seg = latest_ingest_segment(spark, store)
-    assert seg and seg.endswith("seg_000000001"), (
-        "expected the pre-fold flush at the start of batch 2"
+    assert sorted(os.listdir(store)) == ["delta_000000001", "seg_000000000"], (
+        "expected the base snapshot and the pre-fold flush at the start of batch 2"
     )
 
-    # driver death: the in-memory index is gone; batch 3 lands. The
-    # resumed driver LOADS the segment (covers batch 1) and folds the
-    # admitted SINK's tail — exactly the ENGINE-COMMITTED batches at or
-    # after the segment boundary (committed_batch_ids; an uncommitted
-    # sink batch would replay and must not be folded) — the bounded-tail
-    # recovery recipe, ids resolved to raw docs in the corpus store.
+    # driver death; the compactor runs while the driver is down, then
+    # batch 3 lands. The resumed driver LOADS the store (seg_1 covers
+    # batch 1) and hands over the admitted SINK's tail — exactly the
+    # ENGINE-COMMITTED batches at or after the boundary (an uncommitted
+    # sink batch would replay and must not be folded) — ids resolved to
+    # raw docs in the corpus store.
+    ingest_store_compact(spark, store, keep_segments=1)
+    assert sorted(os.listdir(store)) == ["seg_000000001"]
     shutil.copy2(files[2], src2)
-    seg_bid = int(os.path.basename(seg).rsplit("_", 1)[1])
-    tail_bids = sorted(b for b in committed_batch_ids(spark, ck) if b >= seg_bid)
+    recovered, boundary = ingest_store_load(spark, store)
+    assert boundary == 1
+    tail_bids = sorted(b for b in committed_batch_ids(spark, ck) if b >= boundary)
     assert tail_bids == [1], "expected exactly batch 2 in the committed tail"
     tail_ids = [r.doc_id for b in tail_bids for r in per_batch[b]]
-    recovered = ingest_fold_admitted(
-        ingest_index_load(spark, seg),
-        docs.where(F.col("doc_id").isin(tail_ids)),
-    )
     per_batch2: dict[int, list] = {}
     q2 = streaming_minhash_ingest_growing(
         recovered,
@@ -1155,6 +1163,7 @@ def test_streaming_compaction_restart_resumes_from_segment(spark, growing_split,
         checkpoint=ck,
         compact_every=1,
         store=store,
+        tail_docs=docs.where(F.col("doc_id").isin(tail_ids)),
     )
     assert q2.awaitTermination(300), "resumed run did not finish"
     q2.stop()
@@ -1174,30 +1183,28 @@ def test_streaming_compaction_restart_resumes_from_segment(spark, growing_split,
         for r in registry()["x1_ingest_growing"].builder(spark, TEST_SF_DIR).collect()
     )
     assert got == want
+    assert sorted(os.listdir(store)) == ["delta_000000002", "seg_000000001"]
 
 
 def test_flush_batch_replay_skips_self_overwrite(spark, growing_split, tmp_path):
-    """REPLAYING the flush batch with a SEGMENT-LOADED index must skip
-    the save (review r13 #2): the recovered index's lazy checkpoints
-    still read the segment's parquet, so an unguarded re-save would
-    delete its own input mid-plan and destroy the only complete segment.
-    Simulated exactly as a crash leaves it: after a full run commits
-    batches 0-2, the commits-log entry for the flush batch bid=2 is
-    removed (a crash between the seg_2 flush and the engine's commit of
-    batch 2 is precisely 'offsets/2 written, commits/2 not'), the
-    recovery recipe yields load(seg_2) with an EMPTY committed tail, and
-    the restarted engine replays bid=2 — whose flush finds seg_2
-    complete, skips the save, reloads, and re-emits batch 3's admissions
-    identically (without the guard the re-save deletes the loaded
-    members' own parquet mid-plan)."""
-    from iii_aibigdata_capstone_spark.operators.dedup import (
-        ingest_index_load,
-        minhash_ingest_index,
-    )
+    """REPLAYING the flush batch with a STORE-LOADED index must skip the
+    save (review r13 #2): the recovered index's lazy checkpoints still
+    read ``delta_<bid>``'s parquet, so an unguarded re-save would rewrite
+    its own input mid-plan (``index_save`` refuses to overwrite a
+    complete index, so the unguarded replay crashes instead). Simulated
+    exactly as a crash leaves it: after a full run commits batches 0-2
+    (seg_0 + delta_1 + delta_2), the commits-log entry for the flush
+    batch bid=2 is removed (a crash between the delta_2 flush and the
+    engine's commit of batch 2 is precisely 'offsets/2 written,
+    commits/2 not'), the recovery recipe yields ``ingest_store_load``
+    (boundary 2) with an EMPTY committed tail, and the restarted engine
+    replays bid=2 — whose flush finds delta_2 complete, leaves its files
+    untouched, and re-emits batch 3's admissions identically."""
+    from iii_aibigdata_capstone_spark.operators.dedup import minhash_ingest_index
     from iii_aibigdata_capstone_spark.queries import registry
     from iii_aibigdata_capstone_spark.streaming.ingest import (
         committed_batch_ids,
-        latest_ingest_segment,
+        ingest_store_load,
         streaming_minhash_ingest_growing,
     )
 
@@ -1205,7 +1212,7 @@ def test_flush_batch_replay_skips_self_overwrite(spark, growing_split, tmp_path)
     store = str(tmp_path / "store")
     ck = str(tmp_path / "ck")
 
-    # full run: batches 1-3, flushes seg_1 then seg_2 (retention keeps both)
+    # full run: batches 1-3, base seg_0, flushes delta_1 then delta_2
     per_batch: dict[int, list] = {}
     q = streaming_minhash_ingest_growing(
         minhash_ingest_index(docs.where(F.col("doc_id") % 4 == 0)),
@@ -1226,8 +1233,13 @@ def test_flush_batch_replay_skips_self_overwrite(spark, growing_split, tmp_path)
         tuple(r)
         for r in registry()["x1_ingest_growing"].builder(spark, TEST_SF_DIR).collect()
     )
-    seg2 = latest_ingest_segment(spark, store)
-    assert seg2 and seg2.endswith("seg_000000002")
+    layout = ["delta_000000001", "delta_000000002", "seg_000000000"]
+    assert sorted(os.listdir(store)) == layout
+    d2_files = sorted(
+        os.path.relpath(os.path.join(d, f), store)
+        for d, _, fs in os.walk(os.path.join(store, "delta_000000002"))
+        for f in fs
+    )
 
     # crash surgery: un-commit the flush batch (offsets/2 stays, so the
     # engine WILL replay bid=2 on restart — the exact crash window). The
@@ -1245,14 +1257,15 @@ def test_flush_batch_replay_skips_self_overwrite(spark, growing_split, tmp_path)
     os.remove(os.path.join(ck2, "commits", ".2.crc"))
     assert committed_batch_ids(spark, ck2) == {0, 1}
 
-    # recovery recipe: committed tail at/after the seg_2 boundary is
-    # EMPTY ({0,1} are all < 2) — recovered index is the segment alone;
-    # the sink's batch-2 rows are deliberately NOT folded (they replay)
-    tail = sorted(b for b in committed_batch_ids(spark, ck2) if b >= 2)
-    assert tail == []
+    # recovery recipe: the store covers batches < 2, and the committed
+    # tail at/after that boundary is EMPTY ({0,1} are all < 2); the
+    # sink's batch-2 rows are deliberately NOT folded (they replay)
+    recovered, boundary = ingest_store_load(spark, store)
+    assert boundary == 2
+    assert sorted(b for b in committed_batch_ids(spark, ck2) if b >= boundary) == []
     per_batch2: dict[int, list] = {}
     q2 = streaming_minhash_ingest_growing(
-        ingest_index_load(spark, seg2),
+        recovered,
         _arrival_stream(spark, src),
         emit=lambda df, bid: per_batch2.setdefault(bid, []).extend(df.collect()),
         checkpoint=ck2,
@@ -1260,52 +1273,58 @@ def test_flush_batch_replay_skips_self_overwrite(spark, growing_split, tmp_path)
         store=store,
     )
     assert q2.awaitTermination(300), (
-        "replay incarnation crashed — the flush self-overwrote its segment?"
+        "replay incarnation crashed — the flush tried to re-save its segment?"
     )
     q2.stop()
-    # only bid=2 replays; its flush skipped the save (seg_2 survives
-    # complete) and batch 3's admissions re-emit identically — the
-    # idempotent-by-batch-id sink overwrite reproduces the same rows
+    # only bid=2 replays; its flush skipped the save (delta_2's files are
+    # the first incarnation's) and batch 3's admissions re-emit
+    # identically — the idempotent-by-batch-id sink overwrite
+    # reproduces the same rows
     assert sorted(per_batch2) == [2]
     assert sorted((r.doc_id, r.lang, r.n_chars) for r in per_batch2[2]) == sorted(
         (r.doc_id, r.lang, r.n_chars) for r in per_batch[2]
     )
-    assert latest_ingest_segment(spark, store) == seg2
-    # retention: seg_1 (grace generation) + seg_2 survive both incarnations
-    assert sorted(os.listdir(store)) == ["seg_000000001", "seg_000000002"]
+    assert sorted(os.listdir(store)) == layout
+    assert d2_files == sorted(
+        os.path.relpath(os.path.join(d, f), store)
+        for d, _, fs in os.walk(os.path.join(store, "delta_000000002"))
+        for f in fs
+    )
 
 
 def test_concurrent_reader_survives_flush(spark, growing_split, tmp_path):
     """RETENTION GRACE (r13 verdict ask #1): a SECOND consumer that
-    loaded ``seg_N`` (lazy checkpoints UNMATERIALIZED — nothing read
-    yet) must still serve correctly after the ingest stream flushes
-    ``seg_N+1``, because pruning now keeps the previous generation
-    instead of deleting on flush. Under the r13 retire-immediately
-    policy this reader dies with FileNotFound the moment its first
-    action finally scans the pruned parquet — the first thing a
-    multi-job deployment hits. The reader is taken INSIDE the stream
-    (emit of the batch right after the seg_1 flush) and only collected
-    after the final flush retired... would have retired seg_1."""
+    composed generation N off the store (lazy checkpoints UNMATERIALIZED
+    — nothing read yet) must still serve correctly after the store moves
+    on: the ingest keeps flushing deltas and
+    ``ingest_store_compact(keep_segments=2)`` publishes generation N+1,
+    retiring generation N-1 but not N. Under retire-immediately
+    (``keep_segments=1``) this reader dies with FileNotFound the moment
+    its first action finally scans the pruned parquet — the first thing
+    a multi-job deployment hits. The stream's emit of batch 2 compacts
+    the store into seg_1 (generation N) and the reader composes it
+    there; it is only collected after the stream ended and a second
+    compaction landed seg_2."""
     from iii_aibigdata_capstone_spark.operators.dedup import (
         ingest_admit,
-        ingest_index_load,
         minhash_ingest_index,
     )
     from iii_aibigdata_capstone_spark.streaming.ingest import (
+        ingest_store_compact,
+        ingest_store_load,
         streaming_minhash_ingest_growing,
     )
 
     docs, src = growing_split
     store = str(tmp_path / "store")
     per_batch: dict[int, list] = {}
-    reader: list = []  # the concurrent consumer's lazily-loaded index
+    reader: list = []  # the concurrent consumer's lazily-composed index
 
     def _emit(df, bid):
         per_batch.setdefault(bid, []).extend(df.collect())
-        if bid == 1:  # seg_1 just flushed at the start of this batch
-            reader.append(
-                ingest_index_load(spark, os.path.join(store, "seg_000000001"))
-            )
+        if bid == 1:  # delta_1 flushed at the start of this batch
+            ingest_store_compact(spark, store)
+            reader.append(ingest_store_load(spark, store))
 
     q = streaming_minhash_ingest_growing(
         minhash_ingest_index(docs.where(F.col("doc_id") % 4 == 0)),
@@ -1317,12 +1336,24 @@ def test_concurrent_reader_survives_flush(spark, growing_split, tmp_path):
     )
     assert q.awaitTermination(300), "stream did not finish"
     q.stop()
-    assert reader, "the concurrent reader never loaded seg_1"
-    # seg_2 has since flushed; with keep_segments=2 seg_1 SURVIVES, and
+    assert reader, "the concurrent reader never composed seg_1"
+    index, boundary = reader[0]
+    assert boundary == 1
+
+    # the next compaction publishes seg_2 (seg_1 + delta_2) and retires
+    # generation N-1 (seg_0 and the delta_1 it composed with); with
+    # keep_segments=2 seg_1 SURVIVES
+    target = ingest_store_compact(spark, store, keep_segments=2)
+    assert os.path.basename(target) == "seg_000000002"
+    assert sorted(os.listdir(store)) == [
+        "delta_000000002",
+        "seg_000000001",
+        "seg_000000002",
+    ]
     # the reader's first-ever materialization (this admission) succeeds
     # with exactly the values seg_1 holds: residents + batch-0 admissions
     batch3 = docs.where(F.col("doc_id") % 4 == 3)
-    got = sorted(tuple(r) for r in ingest_admit(reader[0], batch3).collect())
+    got = sorted(tuple(r) for r in ingest_admit(index, batch3).collect())
     adm0 = [r.doc_id for r in per_batch[min(per_batch)]]
     want_index = minhash_ingest_index(
         docs.where((F.col("doc_id") % 4 == 0) | F.col("doc_id").isin(adm0))
@@ -1332,10 +1363,9 @@ def test_concurrent_reader_survives_flush(spark, growing_split, tmp_path):
 
 
 def test_delta_segment_flush_is_o_delta_and_composes(spark, growing_split, tmp_path):
-    """DELTA-ONLY SEGMENTS (r13 verdict ask #2): with
-    ``segment_mode="delta"`` the stream snapshots the resident base ONCE
-    (seg_000000000) and each flush writes ONLY the deltas accumulated
-    since the previous flush. Pins: (1) admissions byte-identical to the
+    """DELTA-ONLY SEGMENTS (r13 verdict ask #2): the stream snapshots
+    the resident base ONCE (seg_000000000) and each flush writes ONLY
+    the deltas accumulated since the previous flush. Pins: (1) admissions byte-identical to the
     batch fold (flush shape is physical, never semantic); (2) the store
     holds base + one delta per flush, and ``delta_1``'s members are
     row-identical to ``minhash_ingest_index(batch-0 admitted docs)`` —
@@ -1364,7 +1394,6 @@ def test_delta_segment_flush_is_o_delta_and_composes(spark, growing_split, tmp_p
         checkpoint=str(tmp_path / "ck"),
         compact_every=1,
         store=store,
-        segment_mode="delta",
     )
     assert q.awaitTermination(300), "stream did not finish"
     q.stop()
@@ -1416,7 +1445,7 @@ def test_delta_segment_flush_is_o_delta_and_composes(spark, growing_split, tmp_p
 
 def test_delta_store_restart_recovery_and_compact(spark, growing_split, tmp_path):
     """The delta-store RECOVERY RECIPE + the out-of-band compactor:
-    drain batches 1-2 in delta mode (base snapshot + delta_1), simulate
+    drain batches 1-2 (base snapshot + delta_1), simulate
     driver death, then restart from ``ingest_store_load`` with the
     committed sink tail handed to ``tail_docs`` — the trigger folds it
     as PENDING so the next delta flush PERSISTS it (folding into the
@@ -1458,7 +1487,6 @@ def test_delta_store_restart_recovery_and_compact(spark, growing_split, tmp_path
         checkpoint=ck,
         compact_every=1,
         store=store,
-        segment_mode="delta",
     )
     assert q.awaitTermination(300), "first run did not finish"
     q.stop()
@@ -1484,7 +1512,6 @@ def test_delta_store_restart_recovery_and_compact(spark, growing_split, tmp_path
         checkpoint=ck,
         compact_every=1,
         store=store,
-        segment_mode="delta",
         tail_docs=docs.where(F.col("doc_id").isin(tail_ids)),
     )
     assert q2.awaitTermination(300), "resumed run did not finish"
@@ -1536,7 +1563,7 @@ def test_delta_store_restart_recovery_and_compact(spark, growing_split, tmp_path
 
 
 def test_growing_state_invariant(spark, growing_split):
-    """The delta-mode state invariant (review r14, the tail
+    """The growing trigger's state invariant (review r14, the tail
     double-count bug's pin): ``cur == base UNION pending`` AT INIT —
     the recovered tail folds into ``cur`` (admissions see it) and into
     ``pending`` (the next flush persists it) but NOT into ``base``,
