@@ -11,9 +11,12 @@ from hypothesis import strategies as st
 
 from iii_aibigdata_capstone_spark.operators.grouped import (
     assembly_block,
+    components_block,
     connected_components,
     greedy_match,
+    iou_1d,
     match_block,
+    match_from_boxes_block,
     nms_block,
     nms_greedy,
 )
@@ -114,6 +117,65 @@ def test_assembly_block_matches_components_of_explicit_edges(rows):
     for f in frames:
         exp_set |= set(map(tuple, f[["image_id", "node", "component"]].to_numpy()))
     got_set = set(map(tuple, got[["image_id", "node", "component"]].to_numpy()))
+    assert got_set == exp_set
+
+
+edge_row = st.tuples(
+    st.integers(0, 3),  # image_id
+    st.integers(0, 12),  # a
+    st.integers(0, 12),  # b (shared node space: chains, cycles, self-loops)
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(edge_row, min_size=1, max_size=40))
+def test_components_block_equals_per_group_union_find(rows):
+    block = (
+        pd.DataFrame(rows, columns=["image_id", "a", "b"])
+        .sort_values(["image_id", "a", "b"])
+        .reset_index(drop=True)
+    )
+    got = components_block(block)
+    exp_set = set()
+    for img, g in block.groupby("image_id", sort=True):
+        out = connected_components(g)
+        exp_set |= {(img, n, c) for n, c in zip(out["node"], out["component"])}
+    got_set = set(map(tuple, got[["image_id", "node", "component"]].to_numpy()))
+    assert got_set == exp_set
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(box_row, min_size=1, max_size=30))
+def test_match_from_boxes_block_equals_pairs_then_greedy(rows):
+    # duplicate box ids kept: same-id rows must never pair
+    block = (
+        pd.DataFrame(
+            [(i, b, float(lo), float(lo + w)) for i, b, lo, w, _ in rows],
+            columns=["image_id", "box_id", "lo", "hi"],
+        )
+        .sort_values(["image_id", "box_id"], kind="stable")
+        .reset_index(drop=True)
+    )
+    got = match_from_boxes_block(block)
+    # reference: explicit candidate pair list -> per-group greedy_match
+    exp_set = set()
+    for img, g in block.groupby("image_id", sort=True):
+        arr = g.to_records(index=False)
+        pairs = []
+        for i in range(len(arr)):
+            for j in range(i + 1, len(arr)):
+                if arr[i]["box_id"] == arr[j]["box_id"]:
+                    continue
+                score = round(
+                    iou_1d(arr[i]["lo"], arr[i]["hi"], arr[j]["lo"], arr[j]["hi"]), 6
+                )
+                if score > 0:
+                    a, b = sorted((int(arr[i]["box_id"]), int(arr[j]["box_id"])))
+                    pairs.append((a, b, score))
+        if pairs:
+            out = greedy_match(pd.DataFrame(pairs, columns=["a", "b", "score"]))
+            exp_set |= {(img, a, b, s) for a, b, s in out.itertuples(index=False)}
+    got_set = set(map(tuple, got[["image_id", "a", "b", "score"]].to_numpy().tolist()))
     assert got_set == exp_set
 
 
