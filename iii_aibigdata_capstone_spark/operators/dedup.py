@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import table
 from ..registry import QuerySpec, make_registrar
+from .grouped import min_label_components
 
 SPECS: list[QuerySpec] = []
 query = make_registrar(SPECS)
@@ -1825,8 +1826,9 @@ def x2_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unlike the per-image union-find (T4, groups of dozens), this graph
     spans the whole corpus, so it runs through the SIZE-ADAPTIVE
     ``_min_label_propagation``: a dup graph under ``DRIVER_CC_MAX_EDGES``
-    (the common case — most docs are not dups) is solved by a bounded
-    driver union-find; past that threshold it is iterative distributed
+    (the common case — most docs are not dups) is collected and solved on
+    the driver by T4's union-find (``grouped.min_label_components``); past
+    that threshold it is iterative distributed
     label propagation with pointer jumping — O(log diameter) rounds, each
     a plain shuffle-on-key join, labels never leaving the cluster. The
     oracle is a recursive-CTE transitive closure (viable at oracle SF)."""
@@ -1836,37 +1838,6 @@ def x2_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DRIVER_CC_MAX_EDGES = 100_000
-
-
-def _driver_union_find(edge_rows):
-    """Min-label connected components on the driver (path-compressed
-    union-find) — byte-for-byte the same (node, label) contract as the
-    distributed propagation: every node that appears in a pair gets the
-    MIN node id of its component."""
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in edge_rows:
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # union by min keeps the root AT the component min, so the
-            # final label read-off is just find()
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-    return [(n, find(n)) for n in parent]
 
 
 def _min_label_propagation(
@@ -1879,7 +1850,8 @@ def _min_label_propagation(
     path pays a fixed ~2.3 s of per-round Spark-job overhead regardless of
     size — so if the edge table fits under ``DRIVER_CC_MAX_EDGES`` it is
     collected (explicitly bounded — the count gates the collect) and
-    solved with a path-compressed union-find on the driver, exactly
+    solved on the driver by ``grouped.min_label_components``, the
+    path-compressed union-find the grouped block kernels share, exactly
     reproducing the distributed labels (pinned by
     tests/test_analytics.py::test_cc_local_and_distributed_paths_agree).
     Above the threshold: iterative min-label propagation — every node
@@ -1910,7 +1882,7 @@ def _min_label_propagation(
         node_type = dict(pairs.dtypes)["doc_a"]
         # one bounded job (the count above gates the size); collect, not
         # toLocalIterator, which pays roughly one job per partition
-        rows = _driver_union_find((r[0], r[1]) for r in edges.collect())
+        rows = min_label_components((r[0], r[1]) for r in edges.collect())
         return pairs.sparkSession.createDataFrame(
             rows, f"node {node_type}, label {node_type}"
         )

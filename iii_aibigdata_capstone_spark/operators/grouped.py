@@ -19,7 +19,7 @@ applyInPandas at TPC-H group cardinalities).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -173,9 +173,72 @@ def connected_components(group: pd.DataFrame) -> pd.DataFrame:
 
 # ---------------------------------------------------------------------------
 # Block kernels: same greedy semantics, applied to a batch of whole groups
-# (rows contiguous + pre-sorted per group) with numpy row access — no
-# per-group pandas DataFrame construction.
+# (rows contiguous + pre-sorted per group). ``nms_block`` is vectorized
+# rank arithmetic; the other four walk each group's run (``_runs``) with
+# three shared pieces: the candidate pair enumerator (``_iou_pairs``), the
+# greedy one-to-one walk (``_greedy_pairs``) and the min-label union-find
+# (``min_label_components``, also dedup's driver-side connected components).
 # ---------------------------------------------------------------------------
+
+
+def _runs(img: np.ndarray) -> Iterator[tuple[int, int]]:
+    """``(start, end)`` of each run of equal keys in the key-sorted ``img``."""
+    starts = np.flatnonzero(np.r_[True, img[1:] != img[:-1]])
+    return zip(starts.tolist(), np.r_[starts[1:], len(img)].tolist())
+
+
+def min_label_components(edges: Iterable[tuple]) -> list[tuple]:
+    """Path-compressed union-find over ``(a, b)`` edges: ``(node, min member
+    of its component)`` for every node that appears in an edge. Union by min
+    keeps each root AT its component min, so the label read-off is find()."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return [(n, find(n)) for n in parent]
+
+
+def _greedy_pairs(pairs: list[tuple]) -> list[int]:
+    """Indices of the ``(a, b)`` pairs, given in priority order, that the
+    greedy one-to-one walk accepts: a pair is taken iff neither endpoint is
+    used yet (separate pools for a and b), stopping at min(distinct a,
+    distinct b) accepted pairs."""
+    limit = min(len({a for a, _ in pairs}), len({b for _, b in pairs}))
+    used_a: set = set()
+    used_b: set = set()
+    keep: list[int] = []
+    for i, (a, b) in enumerate(pairs):
+        if len(keep) >= limit:
+            break
+        if a not in used_a and b not in used_b:
+            used_a.add(a)
+            used_b.add(b)
+            keep.append(i)
+    return keep
+
+
+def _iou_pairs(box: list, lo: list, hi: list, s: int, e: int) -> list[tuple]:
+    """``(iou, a, b)`` for each pair of rows in ``[s, e)`` with positive
+    overlap, ``a < b`` by box id. Rows sharing an id never pair (the join
+    predicate is ``a.box_id < b.box_id``; duplicate source rows share ids)."""
+    out = []
+    for i in range(s, e):
+        for j in range(i + 1, e):
+            inter = min(hi[i], hi[j]) - max(lo[i], lo[j])
+            if inter > 0 and box[i] != box[j]:
+                union = (hi[i] - lo[i]) + (hi[j] - lo[j]) - inter
+                out.append((inter / union, min(box[i], box[j]), max(box[i], box[j])))
+    return out
 
 
 def nms_block(pdf: pd.DataFrame, iou_threshold: float = 0.3) -> pd.DataFrame:
@@ -218,26 +281,12 @@ def nms_block(pdf: pd.DataFrame, iou_threshold: float = 0.3) -> pd.DataFrame:
 def match_block(pdf: pd.DataFrame) -> pd.DataFrame:
     """Greedy one-to-one matching over a block sorted by (image_id asc,
     score desc, a asc, b asc). Identical output to :func:`greedy_match`."""
-    img = pdf["image_id"].to_numpy()
-    a = pdf["a"].to_numpy()
-    b = pdf["b"].to_numpy()
-    starts = np.flatnonzero(np.r_[True, img[1:] != img[:-1]])
-    ends = np.r_[starts[1:], len(img)]
-    keep = np.zeros(len(img), dtype=bool)
-    for s, e in zip(starts, ends):
-        limit = min(len(set(a[s:e])), len(set(b[s:e])))
-        used_a: set = set()
-        used_b: set = set()
-        taken = 0
-        for i in range(s, e):
-            if taken >= limit:
-                break
-            if a[i] in used_a or b[i] in used_b:
-                continue
-            used_a.add(a[i])
-            used_b.add(b[i])
-            keep[i] = True
-            taken += 1
+    a = pdf["a"].to_numpy().tolist()
+    b = pdf["b"].to_numpy().tolist()
+    keep = np.zeros(len(pdf), dtype=bool)
+    for s, e in _runs(pdf["image_id"].to_numpy()):
+        for i in _greedy_pairs(list(zip(a[s:e], b[s:e]))):
+            keep[s + i] = True
     return pdf[keep]
 
 
@@ -245,34 +294,14 @@ def components_block(pdf: pd.DataFrame) -> pd.DataFrame:
     """Union-find per contiguous image_id run over an edge block sorted by
     image_id asc. Output: (image_id, node, component=min member)."""
     img = pdf["image_id"].to_numpy()
-    ea = pdf["a"].to_numpy()
-    eb = pdf["b"].to_numpy()
-    starts = np.flatnonzero(np.r_[True, img[1:] != img[:-1]])
-    ends = np.r_[starts[1:], len(img)]
-    out_img: list = []
-    out_node: list = []
-    out_comp: list = []
-    for s, e in zip(starts, ends):
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for i in range(s, e):
-            for node in (ea[i], eb[i]):
-                if node not in parent:
-                    parent[node] = node
-            ra, rb = find(ea[i]), find(eb[i])
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        nodes = sorted(parent)
-        out_img.extend([img[s]] * len(nodes))
-        out_node.extend(nodes)
-        out_comp.extend(find(n) for n in nodes)
-    return pd.DataFrame({"image_id": out_img, "node": out_node, "component": out_comp})
+    a = pdf["a"].to_numpy().tolist()
+    b = pdf["b"].to_numpy().tolist()
+    rows = [
+        (img[s], node, comp)
+        for s, e in _runs(img)
+        for node, comp in sorted(min_label_components(zip(a[s:e], b[s:e])))
+    ]
+    return pd.DataFrame(rows, columns=["image_id", "node", "component"])
 
 
 def match_from_boxes_block(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -284,100 +313,36 @@ def match_from_boxes_block(pdf: pd.DataFrame) -> pd.DataFrame:
     semantics match :func:`greedy_match` (separate endpoint pools, stop at
     min distinct endpoints)."""
     img = pdf["image_id"].to_numpy()
-    box = pdf["box_id"].to_numpy()
-    lo = pdf["lo"].to_numpy()
-    hi = pdf["hi"].to_numpy()
-    starts = np.flatnonzero(np.r_[True, img[1:] != img[:-1]])
-    ends = np.r_[starts[1:], len(img)]
-    out_img: list = []
-    out_a: list = []
-    out_b: list = []
-    out_score: list = []
-    for s, e in zip(starts, ends):
-        pairs: list[tuple[float, int, int]] = []
-        for i in range(s, e):
-            for j in range(i + 1, e):
-                if box[i] == box[j]:
-                    continue
-                inter = min(hi[i], hi[j]) - max(lo[i], lo[j])
-                if inter <= 0:
-                    continue
-                union = (hi[i] - lo[i]) + (hi[j] - lo[j]) - inter
-                score = round(inter / union, 6)
-                if score > 0:
-                    a, b = (box[i], box[j]) if box[i] < box[j] else (box[j], box[i])
-                    pairs.append((score, int(a), int(b)))
-        if not pairs:
-            continue
-        pairs.sort(key=lambda p: (-p[0], p[1], p[2]))
-        limit = min(len({p[1] for p in pairs}), len({p[2] for p in pairs}))
-        used_a: set = set()
-        used_b: set = set()
-        for score, a, b in pairs:
-            if len(used_a) >= limit:
-                break
-            if a in used_a or b in used_b:
-                continue
-            used_a.add(a)
-            used_b.add(b)
-            out_img.append(img[s])
-            out_a.append(a)
-            out_b.append(b)
-            out_score.append(score)
-    return pd.DataFrame(
-        {"image_id": out_img, "a": out_a, "b": out_b, "score": out_score}
-    )
+    box, lo, hi = (pdf[c].to_numpy().tolist() for c in ("box_id", "lo", "hi"))
+    rows = []
+    for s, e in _runs(img):
+        # sorted (-score, a, b) is the walk order; round(x * 1e6) / 1e6 is
+        # numpy's round(x, 6) (rint of x * 1e6, then / 1e6), bit for bit
+        ranked = sorted(
+            (-round(iou * 1e6) / 1e6, a, b) for iou, a, b in _iou_pairs(box, lo, hi, s, e)
+        )
+        ranked = [(a, b, -neg) for neg, a, b in ranked if neg < 0]
+        rows += [(img[s], *ranked[i]) for i in _greedy_pairs([p[:2] for p in ranked])]
+    return pd.DataFrame(rows, columns=["image_id", "a", "b", "score"])
 
 
 def assembly_block(pdf: pd.DataFrame, iou_threshold: float = 0.3) -> pd.DataFrame:
     """Person assembly from BOXES (not pre-joined edges): per contiguous
     image_id run, pair boxes with IoU >= threshold and union-find the
-    resulting graph — the edge generation happens here, in O(group^2) numpy
+    resulting graph — the edge generation happens here, in O(group^2) work
     per tiny group, instead of a relational self-join that would shuffle
     the box table a second time. Output matches :func:`components_block`
     fed with the IoU edge list."""
     img = pdf["image_id"].to_numpy()
-    box = pdf["box_id"].to_numpy()
-    lo = pdf["lo"].to_numpy()
-    hi = pdf["hi"].to_numpy()
-    starts = np.flatnonzero(np.r_[True, img[1:] != img[:-1]])
-    ends = np.r_[starts[1:], len(img)]
-    out_img: list = []
-    out_node: list = []
-    out_comp: list = []
-    for s, e in zip(starts, ends):
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for i in range(s, e):
-            for j in range(i + 1, e):
-                if box[i] == box[j]:
-                    # join predicate is box_id < box_id: two detections
-                    # sharing an id (duplicate source rows) never pair
-                    continue
-                inter = min(hi[i], hi[j]) - max(lo[i], lo[j])
-                if inter <= 0:
-                    continue
-                union = (hi[i] - lo[i]) + (hi[j] - lo[j]) - inter
-                if inter / union < iou_threshold:
-                    continue
-                a, b = box[i], box[j]
-                for node in (a, b):
-                    if node not in parent:
-                        parent[node] = node
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-        nodes = sorted(parent)
-        out_img.extend([img[s]] * len(nodes))
-        out_node.extend(nodes)
-        out_comp.extend(find(n) for n in nodes)
-    return pd.DataFrame({"image_id": out_img, "node": out_node, "component": out_comp})
+    box, lo, hi = (pdf[c].to_numpy().tolist() for c in ("box_id", "lo", "hi"))
+    rows = [
+        (img[s], node, comp)
+        for s, e in _runs(img)
+        for node, comp in sorted(min_label_components(
+            (a, b) for iou, a, b in _iou_pairs(box, lo, hi, s, e) if iou >= iou_threshold
+        ))
+    ]
+    return pd.DataFrame(rows, columns=["image_id", "node", "component"])
 
 
 # ---------------------------------------------------------------------------

@@ -17,6 +17,7 @@ from iii_aibigdata_capstone_spark.operators.grouped import (
     iou_1d,
     match_block,
     match_from_boxes_block,
+    min_label_components,
     nms_block,
     nms_greedy,
 )
@@ -350,14 +351,13 @@ def test_minhash_signature_matches_python_model(spark, docs_grams):
     )
 )
 def test_driver_union_find_matches_brute_force(pairs):
-    """_driver_union_find (the small-graph fast path of the size-adaptive
-    CC) must assign every node the MIN node id of its connected component,
-    for arbitrary pair lists — checked against a brute-force BFS closure."""
-    from iii_aibigdata_capstone_spark.operators.dedup import _driver_union_find
-
+    """min_label_components (the union-find of the grouped block kernels
+    and the small-graph fast path of the size-adaptive CC) must assign
+    every node the MIN node id of its connected component, for arbitrary
+    pair lists — checked against a brute-force BFS closure."""
     # the engine path feeds both edge directions; mirror that
     edges = pairs + [(b, a) for a, b in pairs]
-    got = dict(_driver_union_find(iter(edges)))
+    got = dict(min_label_components(iter(edges)))
 
     adj: dict[int, set[int]] = {}
     for a, b in edges:
