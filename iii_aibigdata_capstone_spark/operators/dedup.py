@@ -1882,7 +1882,7 @@ def _min_label_propagation(
         node_type = dict(pairs.dtypes)["doc_a"]
         # one bounded job (the count above gates the size); collect, not
         # toLocalIterator, which pays roughly one job per partition
-        rows = min_label_components((r[0], r[1]) for r in edges.collect())
+        rows = min_label_components(edges.collect())
         return pairs.sparkSession.createDataFrame(
             rows, f"node {node_type}, label {node_type}"
         )
