@@ -4,11 +4,24 @@ The reference has no table abstraction (SURVEY.md §1): it reads CSVs on the
 driver and captures them in closures. Here every input is a named parquet
 relation loaded through ``spark.read.parquet`` so Catalyst gets column
 pruning + filter pushdown + partition-sized splits for free.
+
+A read starts no Spark job: the schema comes from the file's parquet footer
+(``pyarrow.parquet.read_schema``, a local read of a few KB) and is handed to
+the reader, so Spark skips its one-job schema inference. The converted
+schema equals the one Spark infers for every table file the engine reads
+(tests/test_contract.py pins it at three scale factors); TIMESTAMP(NANOS)
+columns map to LONG, as ``spark.sql.legacy.parquet.nanosAsLong`` reads
+them, and are floored to micros below.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import LongType, StructField, StructType
 
 from .session import apply_runtime_confs
 
@@ -30,19 +43,37 @@ TABLES: tuple[str, ...] = (
 ALWAYS_BROADCAST: frozenset[str] = frozenset({"region", "nation"})
 
 
+def _is_nanos(t: pa.DataType) -> bool:
+    return pa.types.is_timestamp(t) and t.unit == "ns"
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     apply_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # nanosAsLong=true surfaced epoch-nanos; floor to micros and make a
-        # naive (NTZ) timestamp — matches DuckDB's ns->us parquet read.
-        import pyspark.sql.functions as F
-
-        df = df.withColumn(
-            "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")
-        )
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        footer = pq.read_schema(path)
+    except FileNotFoundError:
+        spark.read.parquet(path)  # raises Spark's own PATH_NOT_FOUND
+        raise
+    schema = StructType(
+        [
+            StructField(f.name, LongType() if _is_nanos(f.type) else from_arrow_type(
+                f.type, prefer_timestamp_ntz=True
+            ))
+            for f in footer
+        ]
+    )
+    df = spark.read.schema(schema).parquet(path)
+    for f in footer:
+        if _is_nanos(f.type):
+            # epoch-nanos LONG: floor to micros and make a naive (NTZ)
+            # timestamp — matches DuckDB's ns->us parquet read.
+            df = df.withColumn(
+                f.name,
+                F.expr(f"CAST(timestamp_micros(`{f.name}` DIV 1000) AS TIMESTAMP_NTZ)"),
+            )
     return df
 
 

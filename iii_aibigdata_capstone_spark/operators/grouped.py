@@ -5,9 +5,13 @@ These are the reference's three genuinely non-relational algorithms —
 order-dependent greedy loops whose semantics change if 'relationalized'
 (SURVEY.md §7 risk register). They become custom *physical* operators:
 one shuffle on the group key (image id), groups made contiguous by an
-in-partition sort, then ``mapInPandas`` blocks running the exact greedy
-logic over thousands of groups per Arrow batch (see _grouped_blocks).
-Everything upstream/downstream stays Catalyst.
+in-partition sort, then Python over Arrow batches of thousands of groups
+running the exact greedy logic. NMS only decides one keep bit per box, so
+W2 sends the three columns it reads through an iterator ``pandas_udf`` and
+filters on the returned flags (``nms_keep_batches``); the kernels that emit
+new rows (W3's pairs, T4's components, the replay lane) stream whole-group
+batches through ``mapInPandas`` (see _grouped_blocks). Everything
+upstream/downstream stays Catalyst.
 
 Scale shape: work is embarrassingly parallel across groups; a group is
 dozens of rows (boxes/peaks per image), so the kernel is O(small^2) per
@@ -42,11 +46,17 @@ query = make_registrar(SPECS)
 # slices at sf0.1 and ~150M at 100 TB — per-group overhead dominates by 100×.
 #
 # Instead: shuffle once on the group key, sort within partitions so each
-# group is contiguous, then ``mapInPandas`` — ONE Python call per Arrow batch
-# (thousands of groups), with a carry-over buffer so a group straddling two
-# Arrow batches is reassembled before its kernel runs. Exact same greedy
-# semantics, ~100× less crossing overhead, and the only data movement is the
-# one hash shuffle on the key (identical to what applyInPandas needs anyway).
+# group is contiguous, then ONE Python call per Arrow batch (thousands of
+# groups), carrying a group that straddles two Arrow batches over to the
+# next. Exact same greedy semantics, ~100× less crossing overhead, and the
+# only data movement is the one hash shuffle on the key (identical to what
+# applyInPandas needs anyway). Two forms:
+# - a kernel that only keeps or drops rows (W2's NMS) is a keep-flag
+#   iterator ``pandas_udf`` in a ``where``: only the columns it reads cross
+#   into Python, one bool per row comes back, and the other columns stay
+#   in the JVM;
+# - a kernel that emits new rows (pairs, components) runs through
+#   ``_grouped_blocks``' ``mapInPandas``.
 
 
 def _grouped_blocks(
@@ -173,7 +183,7 @@ def connected_components(group: pd.DataFrame) -> pd.DataFrame:
 
 # ---------------------------------------------------------------------------
 # Block kernels: same greedy semantics, applied to a batch of whole groups
-# (rows contiguous + pre-sorted per group). ``nms_block`` is vectorized
+# (rows contiguous + pre-sorted per group). ``nms_keep`` is vectorized
 # rank arithmetic; the other four walk each group's run (``_runs``) with
 # three shared pieces: the candidate pair enumerator (``_iou_pairs``), the
 # greedy one-to-one walk (``_greedy_pairs``) and the min-label union-find
@@ -241,9 +251,11 @@ def _iou_pairs(box: list, lo: list, hi: list, s: int, e: int) -> list[tuple]:
     return out
 
 
-def nms_block(pdf: pd.DataFrame, iou_threshold: float = 0.3) -> pd.DataFrame:
-    """Greedy NMS over a block sorted by (image_id asc, prob desc, box_id
-    asc). Identical output to :func:`nms_greedy` run per group.
+def nms_keep(
+    img: np.ndarray, lo: np.ndarray, hi: np.ndarray, iou_threshold: float = 0.3
+) -> np.ndarray:
+    """Keep mask of greedy NMS over boxes sorted by (image_id asc, prob desc,
+    box_id asc). Keeps exactly the rows :func:`nms_greedy` keeps per group.
 
     Vectorized rank iteration: greedy suppression only ever flows from a
     lower-rank (higher-prob) box to higher ranks in the same group, so
@@ -251,18 +263,14 @@ def nms_block(pdf: pd.DataFrame, iou_threshold: float = 0.3) -> pd.DataFrame:
     every alive box whose IoU with its group's (still-alive) rank-r box
     exceeds the threshold — reproduces the sequential greedy exactly, in
     max_group_size passes over the block instead of a Python loop per row."""
-    n = len(pdf)
+    n = len(img)
+    alive = np.ones(n, dtype=bool)
     if n == 0:
-        return pdf
-    img = pdf["image_id"].to_numpy()
-    lo = pdf["lo"].to_numpy()
-    hi = pdf["hi"].to_numpy()
-    new_group = np.r_[True, img[1:] != img[:-1]]
-    starts = np.flatnonzero(new_group)
+        return alive
+    starts = np.flatnonzero(np.r_[True, img[1:] != img[:-1]])
     sizes = np.diff(np.r_[starts, n])
     row_start = np.repeat(starts, sizes)  # each row -> its group's first index
     local = np.arange(n) - row_start  # local rank within group (prob desc)
-    alive = np.ones(n, dtype=bool)
     for r in range(int(sizes.max())):
         ref = row_start + r  # rank-r row of each row's group
         cand = (local > r) & (ref < n) & alive
@@ -275,7 +283,27 @@ def nms_block(pdf: pd.DataFrame, iou_threshold: float = 0.3) -> pd.DataFrame:
         union = (hi[c] - lo[c]) + (hi[rc] - lo[rc]) - inter
         suppress = (inter > 0) & (inter / union > iou_threshold)
         alive[c[suppress]] = False
-    return pdf[alive]
+    return alive
+
+
+def nms_keep_batches(
+    batches: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
+) -> Iterator[pd.Series]:
+    """Iterator ``pandas_udf`` body: the :func:`nms_keep` flag of every row of
+    one sorted partition, streamed as ``(image_id, lo, hi)`` Arrow batches.
+    The last group's rows are carried into the next batch and re-ranked
+    with it; that is exact because a box's fate depends only on the
+    higher-ranked boxes of its own group, which come earlier in the order."""
+    carry: list[np.ndarray] | None = None
+    for batch in batches:
+        cols = [c.to_numpy() for c in batch]
+        n = 0 if carry is None else len(carry[0])
+        if n:
+            cols = [np.concatenate([c, b]) for c, b in zip(carry, cols)]
+        yield pd.Series(nms_keep(*cols)[n:])
+        if len(cols[0]):
+            last = int(np.searchsorted(cols[0], cols[0][-1], side="left"))
+            carry = [c[last:] for c in cols]
 
 
 def match_block(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -405,8 +433,9 @@ _NMS_IOU_SQL = (
     tags=("W2", "grouped-map"),
 )
 def w2_nms_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy non-maximum suppression per image via grouped map-in-pandas —
-    the exact sequential semantics of detect.py:37-60 (window-rank
+    """Greedy non-maximum suppression per image as keep flags from an
+    iterator ``pandas_udf`` over the image-sorted partitions (only
+    image_id, lo and hi cross into Python) — the exact sequential semantics of detect.py:37-60 (window-rank
     approximations would change results; SURVEY.md §4).
 
     Oracle-checked (upgraded from rows-only in r2): the DuckDB twin walks
@@ -419,19 +448,17 @@ def w2_nms_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial order would leave greedy results layout-dependent on both
     engines."""
     boxes = detection_boxes(spark, sf_dir)
-    schema = "image_id long, box_id int, lo double, hi double, prob double"
-    return _grouped_blocks(
-        boxes,
-        key="image_id",
-        sort_cols=[
-            F.asc("image_id"),
-            F.desc("prob"),
-            F.asc("box_id"),
-            F.asc("lo"),
-            F.asc("hi"),
-        ],
-        block_fn=nms_block,
-        schema=schema,
+    # asNondeterministic pins the keep filter above the sort: a
+    # deterministic predicate would be pushed below the sort and the
+    # exchange, and the flags would then see rows out of group order.
+    keep = F.pandas_udf(nms_keep_batches, "boolean").asNondeterministic()
+    par = spark.sparkContext.defaultParallelism  # as _grouped_blocks
+    return (
+        boxes.repartition(par, "image_id")
+        .sortWithinPartitions(
+            F.asc("image_id"), F.desc("prob"), F.asc("box_id"), F.asc("lo"), F.asc("hi")
+        )
+        .where(keep("image_id", "lo", "hi"))
     )
 
 

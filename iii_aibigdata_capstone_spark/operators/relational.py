@@ -784,16 +784,21 @@ def q3_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("J1", "flagship"),
 )
 def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q5-shaped 6-way star join. region/nation are broadcast
-    (constant-size at any SF); the customer⋈orders⋈lineitem spine shuffles
-    on its natural keys and AQE handles skew. The local-supplier condition
-    (s_nationkey = c_nationkey) rides the supplier equi-join.
+    """TPC-H-Q5-shaped 6-way star join, ordered so the region filter acts
+    before any fact shuffle: lineitem first joins the broadcast supplier
+    dimension (supplier ⋈ nation ⋈ region[ASIA, EUROPE], carrying
+    s_nationkey and n_name), which drops the ~60% of lines shipped by
+    suppliers outside the two regions map-side. Only then does lineitem
+    shuffle, for the sort-merge join to orders; customer joins last on
+    (c_custkey, c_nationkey = s_nationkey), the local-supplier condition.
+    The broadcast side is the region's share of supplier, not all of it,
+    and lineitem is always the streamed side.
 
-    The lineitem edge carries an explicit MERGE hint: parquet compression
-    tricks the size estimator into auto-broadcasting the 600k-row FACT
-    table (a single-threaded driver hash-relation build — measured 1.32 s
-    vs 0.89 s for SMJ at sf0.1, the r4 bench drift), and a fact-table
-    hash relation is exactly the plan that dies at 100 TB. Sort-merge on
+    The orders edge carries an explicit MERGE hint: parquet compression
+    tricks the size estimator into auto-broadcasting a fact table (a
+    single-threaded driver hash-relation build — measured 1.32 s vs
+    0.89 s for SMJ at sf0.1, the r4 bench drift), and a fact-table hash
+    relation is exactly the plan that dies at 100 TB. Sort-merge on
     l_orderkey is the shape both scales want.
     """
     r = table(spark, sf_dir, "region").where(F.col("r_name").isin("ASIA", "EUROPE"))
@@ -802,16 +807,15 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     s = table(spark, sf_dir, "supplier")
+    sup = (
+        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .select("s_suppkey", "s_nationkey", "n_name")
+    )
     return (
-        F.broadcast(r)
-        .join(F.broadcast(n), n.n_regionkey == r.r_regionkey)
-        .join(c, c.c_nationkey == n.n_nationkey)
-        .join(o, o.o_custkey == c.c_custkey)
-        .join(li.hint("merge"), li.l_orderkey == o.o_orderkey)
-        .join(
-            F.broadcast(s),
-            (s.s_suppkey == li.l_suppkey) & (s.s_nationkey == c.c_nationkey),
-        )
+        li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
+        .join(o.hint("merge"), li.l_orderkey == o.o_orderkey)
+        .join(c, (c.c_custkey == o.o_custkey) & (c.c_nationkey == sup.s_nationkey))
         .groupBy("n_name")
         .agg(
             F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(

@@ -72,6 +72,29 @@ class PlanAudit:
         ops = "|".join(map(re.escape, names))
         return len(re.findall(rf"^\(\d+\) (?:{ops})\b", self.text, re.MULTILINE))
 
+    def scan_path(self, table: str) -> list[str]:
+        """Operators from the first scan of ``table``'s parquet file up to the
+        plan root, read off the indentation of the printed operator tree."""
+        scan = re.search(
+            rf"^\((\d+)\) Scan parquet[^\n]*\n(?:.+\n)*?Location: [^\n]*/{re.escape(table)}\.parquet\b",
+            self.text,
+            re.MULTILINE,
+        )
+        tree = self.text.split("== Physical Plan ==\n", 1)[-1].split("\n\n", 1)[0]
+        nodes = [
+            (len(m.group(1)), m.group(2), m.group(3))
+            for m in re.finditer(r"^([ :+|-]*)(\S.*?) \((\d+)\)$", tree, re.MULTILINE)
+        ]
+        start = next((i for i, n in enumerate(nodes) if scan and n[2] == scan.group(1)), None)
+        if start is None:
+            return []
+        path, depth = [], nodes[start][0] + 1
+        for d, op, _ in reversed(nodes[: start + 1]):
+            if d < depth:
+                path.append(op)
+                depth = d
+        return path
+
     @property
     def python_map_operators(self) -> int:
         return self.nodes("MapInPandas", "FlatMapGroupsInPandas")

@@ -135,6 +135,30 @@ def _semi_join_below_window(a: PlanAudit) -> bool:
     return bool(semi and win) and int(semi.group(1)) < int(win.group(1))
 
 
+def _node_id(a: PlanAudit, op: str) -> int | None:
+    m = re.search(rf"^\((\d+)\) {op}\b", a.text, re.MULTILINE)
+    return int(m.group(1)) if m else None
+
+
+def _keep_flags_above_sort(a: PlanAudit) -> bool:
+    # child-before-parent ids: the flags are computed above the sort iff
+    # their ArrowEvalPython has the higher id (a deterministic keep filter
+    # would be pushed below the sort and the exchange)
+    py, sort = _node_id(a, "ArrowEvalPython"), _node_id(a, "Sort")
+    return py is not None and sort is not None and py > sort
+
+
+def _fact_shuffles_after_dim_join(a: PlanAudit) -> bool:
+    # lineitem's path up to its sort-merge join holds one exchange, and a
+    # broadcast hash join sits below it
+    path = a.scan_path("lineitem")
+    below_smj = path[: path.index("SortMergeJoin Inner")] if "SortMergeJoin Inner" in path else []
+    shuffles = [i for i, op in enumerate(below_smj) if op == "Exchange"]
+    return len(shuffles) == 1 and any(
+        op.startswith("BroadcastHashJoin") for op in below_smj[: shuffles[0]]
+    )
+
+
 def _verify_joins_key_on_hashes(a: PlanAudit) -> bool:
     # the xxhash64 expression itself sits BEFORE the checkpoint (lineage-
     # truncated), so assert its effect on JOIN-KEY lines: the candidate/
@@ -183,11 +207,36 @@ ROWS: tuple[Row, ...] = (
         (PUSHED, widest_scan(7)),
     ),
     Row(
+        "q5_region_revenue",
+        "6-way star join ordered so the region filter acts before the fact shuffle: "
+        "lineitem first joins the broadcast supplier dimension (supplier, nation and "
+        "the two regions), so its only exchange carries the surviving lines to the "
+        "MERGE-hinted join with orders; customer joins last on the local-supplier "
+        "key pair.",
+        (
+            (
+                "lineitem's only exchange before its sort-merge join sits above its "
+                "broadcast hash join to the supplier dimension",
+                _fact_shuffles_after_dim_join,
+            ),
+            present("SortMergeJoin"),
+            absent(BNLJ),
+        ),
+    ),
+    Row(
         "w2_nms_greedy",
-        "Custom physical operator (greedy NMS): ONE hash exchange on the group key, "
-        "in-partition sort makes groups contiguous, then a single MapInPandas streams "
-        "whole-group Arrow batches through the kernel.",
-        (KERNEL_MAP, exchanges_at_most(2)),
+        "Custom physical operator (greedy NMS) as keep flags: ONE hash exchange on the "
+        "group key, an in-partition sort makes groups contiguous, then an iterator "
+        "pandas_udf (ArrowEvalPython) sends only image_id, lo and hi to Python and the "
+        "filter keeps the flagged rows; the other columns never leave the JVM. The "
+        "UDF is nondeterministic so the filter stays above the sort.",
+        (
+            python_maps(0),
+            present("ArrowEvalPython"),
+            exchanges_at_most(2),
+            ("the keep flags are computed above the Sort (higher operator id)",
+             _keep_flags_above_sort),
+        ),
     ),
     Row(
         "x2_ngram_jaccard",

@@ -13,7 +13,8 @@ import os
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs applied even when the caller (e.g. the verify
-# driver) owns the SparkSession. Everything here is safe to set per-query.
+# driver) owns the SparkSession, to every key the caller left unset.
+# Everything here is safe to set per-query.
 RUNTIME_CONFS: dict[str, str] = {
     # Deterministic timestamp semantics: testdata timestamps are naive
     # (parquet isAdjustedToUTC=false); interpret epoch math in UTC so
@@ -67,8 +68,12 @@ def default_parallelism() -> int:
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an externally owned session."""
+    """Apply runtime-settable confs to an externally owned session, each only
+    where the session holds no explicit value: a value the caller set (say
+    ``spark.sql.adaptive.enabled=false``) stays; an unset key gets ours."""
     for key, value in RUNTIME_CONFS.items():
+        if spark.conf.get(key, None) is not None:
+            continue
         try:
             spark.conf.set(key, value)
         except Exception:  # pragma: no cover - conf locked by the owner

@@ -247,3 +247,75 @@ def test_sf1_unroll_slack_guards():
         adj, cseeds, COMM_SHIFT, COMM_UNREACHED * COMM_SHIFT
     )
     assert rounds <= COMM_ROUNDS, f"sf1 LPA fixpoint {rounds} exceeds unroll"
+
+
+def _inferred_table(spark, path):
+    """A table read the way Spark infers it: the reader's own schema job,
+    then the epoch-nanos LONG that ``nanosAsLong`` surfaces for
+    TIMESTAMP(NANOS) floored to micros as a naive timestamp."""
+    import pyspark.sql.functions as F
+
+    df = spark.read.parquet(path)
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn(
+            "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")
+        )
+    return df
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_footer_schema_equals_inferred_schema(spark, sf):
+    """catalog.table takes its schema from the parquet footer and starts no
+    job; for every table file it must equal the schema Spark infers."""
+    from iii_aibigdata_capstone_spark.catalog import TABLES, table
+
+    from .conftest import TEST_SF_DIR
+
+    sf_dir = os.path.join(os.path.dirname(TEST_SF_DIR), sf)
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"no {sf_dir}")
+    for name in TABLES:
+        want = _inferred_table(spark, f"{sf_dir}/{name}.parquet").schema
+        assert table(spark, sf_dir, name).schema == want, name
+
+
+def test_footer_nanos_timestamp_reads_as_ntz_micros(spark, tmp_path):
+    """A TIMESTAMP(NANOS) column written by pyarrow comes out of the catalog
+    as TIMESTAMP_NTZ holding the same values as the inferred read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iii_aibigdata_capstone_spark.catalog import table
+
+    ns = [1_700_000_000_123_456_789, 999, None, 86_400_000_000_000_001]
+    pq.write_table(
+        pa.table({"event_id": pa.array([1, 2, 3, 4]), "ts": pa.array(ns, pa.timestamp("ns"))}),
+        tmp_path / "events.parquet",
+    )
+    got = table(spark, str(tmp_path), "events")
+    want = _inferred_table(spark, str(tmp_path / "events.parquet"))
+    assert dict(got.dtypes)["ts"] == "timestamp_ntz"
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_table_reads_keep_the_callers_runtime_confs(spark):
+    """A runtime conf the caller set survives the next catalog read; a key
+    the caller unset gets the engine's value back."""
+    from iii_aibigdata_capstone_spark.catalog import table
+    from iii_aibigdata_capstone_spark.session import RUNTIME_CONFS
+
+    from .conftest import TEST_SF_DIR
+
+    key = "spark.sql.adaptive.enabled"
+    table(spark, TEST_SF_DIR, "region")
+    spark.conf.set(key, "false")
+    try:
+        table(spark, TEST_SF_DIR, "region")
+        assert spark.conf.get(key) == "false"
+        spark.conf.unset(key)
+        assert spark.conf.get(key, None) is None
+        table(spark, TEST_SF_DIR, "region")
+        assert spark.conf.get(key, None) == RUNTIME_CONFS[key]
+    finally:
+        spark.conf.set(key, RUNTIME_CONFS[key])

@@ -18,8 +18,9 @@ from iii_aibigdata_capstone_spark.operators.grouped import (
     match_block,
     match_from_boxes_block,
     min_label_components,
-    nms_block,
     nms_greedy,
+    nms_keep,
+    nms_keep_batches,
 )
 
 # boxes: small coordinate/prob domains force collisions, ties and overlaps
@@ -48,14 +49,37 @@ def _boxes_frame(rows):
 @given(st.lists(box_row, min_size=1, max_size=40))
 def test_nms_block_equals_per_group_greedy(rows):
     block = _boxes_frame(rows)
-    got = nms_block(block)
-    expected = pd.concat(
+    got = block[nms_keep(*(block[c].to_numpy() for c in ("image_id", "lo", "hi")))]
+    assert _kept(got) == _kept(_greedy_per_group(block))
+
+
+def _greedy_per_group(block):
+    return pd.concat(
         [nms_greedy(g) for _, g in block.groupby("image_id", sort=True)],
         ignore_index=True,
     )
-    got_set = set(map(tuple, got[["image_id", "box_id"]].to_numpy()))
-    exp_set = set(map(tuple, expected[["image_id", "box_id"]].to_numpy()))
-    assert got_set == exp_set
+
+
+def _kept(frame):
+    return set(map(tuple, frame[["image_id", "box_id"]].to_numpy()))
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(box_row, min_size=1, max_size=40),
+    st.lists(st.integers(0, 5), max_size=12),
+)
+def test_nms_keep_flags_survive_any_batch_split(rows, sizes):
+    """The iterator UDF body over one sorted partition cut into Arrow
+    batches anywhere (inside a group, 1-row and empty batches) keeps
+    exactly the rows of per-group greedy NMS, one flag per input row."""
+    block = _boxes_frame(rows)
+    bounds = np.minimum(np.cumsum([0, *sizes]), len(block)).tolist() + [len(block)]
+    batches = [block.iloc[s:e] for s, e in zip(bounds, bounds[1:])]
+    flags = list(nms_keep_batches((b["image_id"], b["lo"], b["hi"]) for b in batches))
+    assert [len(f) for f in flags] == [len(b) for b in batches]
+    got = block[np.concatenate([f.to_numpy(dtype=bool) for f in flags])]
+    assert _kept(got) == _kept(_greedy_per_group(block))
 
 
 pair_row = st.tuples(
