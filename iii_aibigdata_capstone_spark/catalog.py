@@ -21,7 +21,7 @@ import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_type
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import DataType, LongType, StructField, StructType
 
 from .session import apply_runtime_confs
 
@@ -47,6 +47,11 @@ def _is_nanos(t: pa.DataType) -> bool:
     return pa.types.is_timestamp(t) and t.unit == "ns"
 
 
+def _spark_type(t: pa.DataType) -> DataType:
+    # nanosAsLong reads TIMESTAMP(NANOS) as epoch-nanos LONG
+    return LongType() if _is_nanos(t) else from_arrow_type(t, prefer_timestamp_ntz=True)
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -57,14 +62,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     except FileNotFoundError:
         spark.read.parquet(path)  # raises Spark's own PATH_NOT_FOUND
         raise
-    schema = StructType(
-        [
-            StructField(f.name, LongType() if _is_nanos(f.type) else from_arrow_type(
-                f.type, prefer_timestamp_ntz=True
-            ))
-            for f in footer
-        ]
-    )
+    schema = StructType([StructField(f.name, _spark_type(f.type)) for f in footer])
     df = spark.read.schema(schema).parquet(path)
     for f in footer:
         if _is_nanos(f.type):

@@ -435,8 +435,9 @@ _NMS_IOU_SQL = (
 def w2_nms_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy non-maximum suppression per image as keep flags from an
     iterator ``pandas_udf`` over the image-sorted partitions (only
-    image_id, lo and hi cross into Python) — the exact sequential semantics of detect.py:37-60 (window-rank
-    approximations would change results; SURVEY.md §4).
+    image_id, lo and hi cross into Python) — the exact sequential
+    semantics of detect.py:37-60 (window-rank approximations would change
+    results; SURVEY.md §4).
 
     Oracle-checked (upgraded from rows-only in r2): the DuckDB twin walks
     each image's boxes rank by rank in a recursive CTE, carrying the kept

@@ -81,18 +81,16 @@ class PlanAudit:
             re.MULTILINE,
         )
         tree = self.text.split("== Physical Plan ==\n", 1)[-1].split("\n\n", 1)[0]
-        nodes = [
-            (len(m.group(1)), m.group(2), m.group(3))
-            for m in re.finditer(r"^([ :+|-]*)(\S.*?) \((\d+)\)$", tree, re.MULTILINE)
-        ]
-        start = next((i for i, n in enumerate(nodes) if scan and n[2] == scan.group(1)), None)
-        if start is None:
+        nodes = re.findall(r"^([ :+|-]*)(\S.*?) \((\d+)\)$", tree, re.MULTILINE)
+        ids = [node_id for _, _, node_id in nodes]
+        if scan is None or scan.group(1) not in ids:
             return []
-        path, depth = [], nodes[start][0] + 1
-        for d, op, _ in reversed(nodes[: start + 1]):
-            if d < depth:
+        start = ids.index(scan.group(1))
+        path, depth = [], len(nodes[start][0]) + 1
+        for indent, op, _ in reversed(nodes[: start + 1]):
+            if len(indent) < depth:
                 path.append(op)
-                depth = d
+                depth = len(indent)
         return path
 
     @property
