@@ -135,17 +135,11 @@ def _semi_join_below_window(a: PlanAudit) -> bool:
     return bool(semi and win) and int(semi.group(1)) < int(win.group(1))
 
 
-def _node_id(a: PlanAudit, op: str) -> int | None:
-    m = re.search(rf"^\((\d+)\) {op}\b", a.text, re.MULTILINE)
-    return int(m.group(1)) if m else None
-
-
 def _keep_flags_above_sort(a: PlanAudit) -> bool:
-    # child-before-parent ids: the flags are computed above the sort iff
-    # their ArrowEvalPython has the higher id (a deterministic keep filter
-    # would be pushed below the sort and the exchange)
-    py, sort = _node_id(a, "ArrowEvalPython"), _node_id(a, "Sort")
-    return py is not None and sort is not None and py > sort
+    # a deterministic keep filter would be pushed below the sort and the
+    # exchange; on the scan's path to the root the flags must follow the Sort
+    path = a.scan_path("lineitem")
+    return "Sort" in path and "ArrowEvalPython" in path[path.index("Sort"):]
 
 
 def _fact_shuffles_after_dim_join(a: PlanAudit) -> bool:
@@ -234,7 +228,7 @@ ROWS: tuple[Row, ...] = (
             python_maps(0),
             present("ArrowEvalPython"),
             exchanges_at_most(2),
-            ("the keep flags are computed above the Sort (higher operator id)",
+            ("the keep flags (ArrowEvalPython) are computed above the Sort",
              _keep_flags_above_sort),
         ),
     ),
