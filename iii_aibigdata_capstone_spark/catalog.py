@@ -11,7 +11,9 @@ the reader, so Spark skips its one-job schema inference. The converted
 schema equals the one Spark infers for every table file the engine reads
 (tests/test_contract.py pins it at three scale factors); TIMESTAMP(NANOS)
 columns map to LONG, as ``spark.sql.legacy.parquet.nanosAsLong`` reads
-them, and are floored to micros below.
+them, and are floored to micros below. Each table is one parquet file that
+the driver process can open (the driver's ``{sf_dir}/{name}.parquet``
+layout); the footer read refuses a directory of part files.
 """
 
 from __future__ import annotations
